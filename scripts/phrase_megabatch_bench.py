@@ -70,14 +70,14 @@ def main() -> None:
                 mega.append({"qid": qid, "query": " ".join(toks[s : s + 2]), "k": 10})
                 qid += 1
 
-        search_index_phrase(reader, mega[:10], distributed_idf=True).collect()  # warm
+        search_index_phrase(reader, mega[:10]).collect()  # warm
         results = []
         for width in widths:
             batch = mega[:width]
             secs, rows = [], set()
             for _ in range(reps):
                 t0 = time.perf_counter()
-                n = search_index_phrase(reader, batch, distributed_idf=True).count()
+                n = search_index_phrase(reader, batch).count()
                 secs.append(round(time.perf_counter() - t0, 2))
                 rows.add(int(n))
             assert len(rows) == 1, f"rows moved across reps: {rows}"

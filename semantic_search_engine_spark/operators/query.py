@@ -118,6 +118,23 @@ def _query_plan(queries: list[dict]) -> tuple[list[tuple[int, int, list[str]]], 
     return plan, sorted(allterms)
 
 
+def _term_blocks(reader: IndexReader, postings: DataFrame, terms: list[str]) -> DataFrame:
+    """``postings`` rows of ``terms``, each carrying its term's idf.
+
+    The term set is an Arrow-built relation broadcast-joined against the
+    dictionary (idf) and then against the postings as the scan filter,
+    so its cost on the driver is one local relation, not one engine call
+    per term (``Column.isin`` builds a literal per element)."""
+    terms_df = local_df(reader.spark, [(t,) for t in terms], "term string")
+    term_idf = reader.dictionary().join(F.broadcast(terms_df), "term").select("term", "idf")
+    return postings.join(F.broadcast(term_idf), "term")
+
+
+def _group_idf(pdf: pd.DataFrame) -> dict[str, float]:
+    """term → idf for the terms of one kernel group (from _term_blocks rows)."""
+    return {t: float(v) for t, v in zip(pdf["term"].to_numpy(), pdf["idf"].to_numpy())}
+
+
 def _topk_window(cand: DataFrame) -> DataFrame:
     w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("docid"))
     return (
@@ -127,8 +144,8 @@ def _topk_window(cand: DataFrame) -> DataFrame:
     )
 
 
-def _empty_result(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([], "qid int, rank int, docid long, score double")
+def _empty_result(spark: SparkSession, extra: str = "") -> DataFrame:
+    return spark.createDataFrame([], "qid int, rank int, docid long, score double" + extra)
 
 
 def search_index_exhaustive(reader: IndexReader, queries: list[dict]) -> DataFrame:
@@ -428,7 +445,6 @@ def search_index_wand(
     queries: list[dict],
     theta_factor: float = 1.0,
     keep_boundary_ties: bool = False,
-    distributed_idf: bool | None = None,
     vectorized: bool | None = None,
 ) -> DataFrame:
     """(qid, rank, docid, score) via per-shard block-max pruning.
@@ -461,18 +477,16 @@ def search_index_wand(
     with ``theta_factor != 1.0`` raises rather than silently voiding
     the guarantee.
 
-    ``distributed_idf`` (default: auto at > ``SSSE_IDF_COLLECT_MAX``
-    distinct terms, 100k) removes the one remaining driver-bound
-    structure at mega-batch width: instead of collecting a term→idf
-    dict to the driver (and pushing a giant ``isin`` literal into the
-    scan), the distinct query terms become a small DataFrame that is
+    The batch's distinct terms reach the scan as a relation, not a
+    literal: they become a small Arrow-built DataFrame that is
     broadcast-joined against the dictionary for idf and then against
-    the postings as the scan filter — the idf values ride the block
-    rows into each shard kernel, which rebuilds its (tiny) local slice
-    of the map from the group's own columns. Results are identical to
-    the collected path (pytest-asserted); per-query OOV handling moves
-    into the kernel, where a term with no postings in any group simply
-    contributes no blocks.
+    the postings as the scan filter. The idf values ride the block rows
+    into each shard kernel, which rebuilds its (tiny) slice of the
+    term→idf map from the group's own columns, so the driver holds no
+    O(terms) state and makes no per-term engine call (see
+    :func:`_term_blocks`). A term with no postings in any group simply
+    contributes no blocks: an OOV query emits nothing, and an OOV term
+    of a mixed query scores nothing.
 
     ``vectorized`` (default: auto at ≥ ``SSSE_WAND_VECTORIZE_MIN``
     queries, 512; exact pruning only) switches each shard-group kernel
@@ -515,8 +529,6 @@ def search_index_wand(
             "only under exact pruning; theta_factor must be 1.0 with it "
             f"(got {theta_factor})"
         )
-    import os as _os
-
     spark = reader.spark
     plan, terms = _query_plan(queries)
     # Lucene-style MUST_NOT: a query dict's "exclude" string tokenizes
@@ -530,34 +542,21 @@ def search_index_wand(
         for q in queries
     }
     xterms = sorted({t for xs in xmap.values() for t in xs})
-    if distributed_idf is None:
-        distributed_idf = len(terms) > int(_os.environ.get("SSSE_IDF_COLLECT_MAX", "100000"))
-    if distributed_idf:
-        idf_map = None
-        known_plan = [(q, k, ts, xmap[q]) for q, k, ts in plan if ts]
-    else:
-        idf_map = reader.idf_map(terms)
-        if not idf_map:
-            return _empty_result(spark)
-        known_plan = [
-            (qid, k, [t for t in ts if t in idf_map], xmap[qid])
-            for qid, k, ts in plan
-        ]
-        known_plan = [(q, k, ts, xs) for q, k, ts, xs in known_plan if ts]
+    known_plan = [(q, k, ts, xmap[q]) for q, k, ts in plan if ts]
     if not known_plan:
         return _empty_result(spark)
     if vectorized is None:
         vectorized = theta_factor == 1.0 and len(known_plan) >= int(
-            _os.environ.get("SSSE_WAND_VECTORIZE_MIN", "512")
+            os.environ.get("SSSE_WAND_VECTORIZE_MIN", "512")
         )
-    # ship the query plan + idf map as a broadcast variable (cached once
-    # per executor) rather than a UDF closure (re-shipped per task) —
+    # ship the query plan as a broadcast variable (cached once per
+    # executor) rather than a UDF closure (re-shipped per task) —
     # matters once the batch reaches 10^5+ queries. Previous calls'
     # broadcasts are unpersisted (see _LIVE_PLAN_BROADCASTS), so
     # repeated batches in a long-lived session keep at most one plan
     # broadcast resident on executors.
     avgdl = float(reader.stats["avgdl"])
-    bc = _rotate_plan_broadcast(spark, (known_plan, idf_map, avgdl))
+    bc = _rotate_plan_broadcast(spark, (known_plan, avgdl))
 
     # Bundle shards into at most ~4×parallelism task groups: shards are
     # docid-disjoint, so any union of whole shards is a valid WAND unit
@@ -566,21 +565,12 @@ def search_index_wand(
     # queries on this host: 4×cpus beats 1×/2×/8×/16× at both 400k and
     # 2M docs (smaller groups balance better and keep tighter σ bounds;
     # beyond that, per-(query, group) bookkeeping dominates).
-    per_cpu = int(_os.environ.get("SSSE_WAND_GROUPS_PER_CPU", "4"))
+    per_cpu = int(os.environ.get("SSSE_WAND_GROUPS_PER_CPU", "4"))
     n_groups = per_cpu * int(spark.conf.get("spark.sql.shuffle.partitions"))
-    if distributed_idf:
-        # term filter + idf as a broadcast JOIN instead of an isin
-        # literal + driver dict: scales to 10^6-distinct-term batches
-        # with zero O(terms) Python state on the driver. Exclusion
-        # terms join too (their idf is ignored; only their docids are
-        # read in the kernels).
-        scan_terms = sorted(set(terms) | set(xterms))
-        terms_df = local_df(spark, [(t,) for t in scan_terms], "term string")
-        term_idf = reader.dictionary().join(F.broadcast(terms_df), "term").select("term", "idf")
-        blocks = reader.postings().join(F.broadcast(term_idf), "term")
-    else:
-        scan_terms = sorted(set(idf_map) | set(xterms))
-        blocks = reader.postings().filter(F.col("term").isin(scan_terms))
+    # term filter + idf as broadcast JOINS (terms⋈dictionary, then
+    # ⋈postings). Exclusion terms join too (their idf is ignored; only
+    # their docids are read in the kernels).
+    blocks = _term_blocks(reader, reader.postings(), sorted(set(terms) | set(xterms)))
     # explicit partition count: AQE's byte-based coalescing would fold
     # this tiny-bytes exchange into ONE partition and serialize the
     # compute-heavy-per-byte Python kernels (measured: the whole query
@@ -592,11 +582,8 @@ def search_index_wand(
     ).repartition(n_groups, "_qgroup")
 
     def wand_shard(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        known_plan, idf_map, avgdl = bc.value
-        if idf_map is None:  # distributed idf: rebuild this group's slice
-            idf_map = {
-                t: float(v) for t, v in zip(pdf["term"].to_numpy(), pdf["idf"].to_numpy())
-            }
+        known_plan, avgdl = bc.value
+        idf_map = _group_idf(pdf)
         if len(pdf) == 0:
             return pd.DataFrame(
                 {c: pd.Series(dtype=t) for c, t in
@@ -738,11 +725,8 @@ def search_index_wand(
         queries) scatter-add scoring. Sorted-term add order keeps the
         float64 accumulation sequence identical to _score_candidates,
         so rows AND scores match the loop kernel bit-for-bit."""
-        known_plan, idf_map, avgdl = bc.value
-        if idf_map is None:  # distributed idf: rebuild this group's slice
-            idf_map = {
-                t: float(v) for t, v in zip(pdf["term"].to_numpy(), pdf["idf"].to_numpy())
-            }
+        known_plan, avgdl = bc.value
+        idf_map = _group_idf(pdf)
         empty = pd.DataFrame(
             {c: pd.Series(dtype=t) for c, t in
              [("qid", "int32"), ("k", "int32"), ("docid", "int64"), ("score", "float64")]}
@@ -762,8 +746,8 @@ def search_index_wand(
             pdf["docids_bin"], pdf["tfs_bin"], pdf["dls_bin"],
         )
         terms_arr = pdf["term"].to_numpy()
-        # exclusion-only terms have no idf in the collected map; their
-        # impacts are never added (t2q maps positive terms only)
+        # exclusion-only terms' impacts are computed but never added
+        # (t2q maps positive terms only)
         idf_rep = np.repeat(
             np.array([idf_map.get(t, 0.0) for t in terms_arr], dtype=np.float64), ns
         )
@@ -1256,17 +1240,15 @@ def search_index_phrase(
 
     Mega-batch ready: the query plan ships as a BROADCAST variable
     (cached once per executor, previous calls' plan broadcasts
-    unpersisted — the WAND path's discipline), and ``distributed_idf``
-    (default: auto above ``SSSE_IDF_COLLECT_MAX`` distinct terms,
-    100k) replaces the driver-collected idf dict + ``isin`` literal
-    with a broadcast term⋈dictionary join whose idf values ride the
-    block rows into each kernel — zero O(terms) driver state at
-    10⁴-10⁶-phrase width. Results are identical either way
-    (pytest-asserted at a 1000-phrase batch): with distributed idf the
-    conjunctive any-OOV-term-voids-the-query rule moves into the
-    kernel, where a query whose term has no postings in a group never
-    emits there (an index-wide OOV term emits from no group — the
-    same voiding).
+    unpersisted — the WAND path's discipline), and the batch's terms
+    reach the scan as a broadcast term⋈dictionary⋈postings join whose
+    idf values ride the block rows into each kernel — the
+    ``search_index_wand`` term path, with no O(terms) driver state or
+    per-term engine call at 10⁴-10⁶-phrase width. The conjunctive
+    any-OOV-term-voids-the-query rule lives in the kernel: a query
+    whose term has no postings in a group never emits there, and an
+    index-wide OOV term emits from no group. ``distributed_idf`` is
+    accepted for compatibility and ignored (this is the only path).
 
     ``proximity_boost`` (default 0.0 = OFF; every oracle entry runs
     with it off and is unchanged) completes the Lucene analogy by
@@ -1315,49 +1297,28 @@ def search_index_phrase(
         )
         for q in queries
     ]
-    terms = sorted({t for _, _, ws, _, _ in tokenized for t in ws})
-    if distributed_idf is None:
-        distributed_idf = len(terms) > int(os.environ.get("SSSE_IDF_COLLECT_MAX", "100000"))
-    if distributed_idf:
-        idf_map = None
-        known_plan = [p for p in tokenized if p[2]]
-    else:
-        idf_map = reader.idf_map(terms)
-        # conjunctive semantics: any unknown term voids its query
-        known_plan = [
-            p for p in tokenized if p[2] and all(t in idf_map for t in p[2])
-        ]
+    known_plan = [p for p in tokenized if p[2]]
+    windows = ", win_start long, win_end long" if emit_windows else ""
     if not known_plan:
-        return _empty_result(spark)
+        return _empty_result(spark, windows)
     avgdl = float(reader.stats["avgdl"])
     used = sorted({t for _, _, ws, _, _ in known_plan for t in ws})
-    # plan + idf map as a broadcast (cached once per executor), not a
-    # UDF closure (re-shipped per task) — the WAND path's pattern incl.
-    # the unpersist-previous-calls discipline (_LIVE_PLAN_BROADCASTS)
-    bc = _rotate_plan_broadcast(spark, (known_plan, idf_map, avgdl))
+    # plan as a broadcast (cached once per executor), not a UDF closure
+    # (re-shipped per task) — the WAND path's pattern incl. the
+    # unpersist-previous-calls discipline (_LIVE_PLAN_BROADCASTS)
+    bc = _rotate_plan_broadcast(spark, (known_plan, avgdl))
 
     per_cpu = int(os.environ.get("SSSE_WAND_GROUPS_PER_CPU", "4"))
     n_groups = per_cpu * int(spark.conf.get("spark.sql.shuffle.partitions"))
-    base = reader.postings(positions=True)
-    if distributed_idf:
-        # term filter as a broadcast JOIN instead of a 10⁵+-string isin
-        # literal; idf rides the block rows (rebuilt per group below)
-        terms_df = local_df(spark, [(t,) for t in used], "term string")
-        term_idf = reader.dictionary().join(F.broadcast(terms_df), "term").select("term", "idf")
-        blocks = base.join(F.broadcast(term_idf), "term")
-    else:
-        blocks = base.filter(F.col("term").isin(used))
+    blocks = _term_blocks(reader, reader.postings(positions=True), used)
     # explicit count: exempt from AQE coalescing (see search_index_wand)
     blocks = blocks.withColumn(
         "_qgroup", F.pmod(F.col("shard"), F.lit(n_groups))
     ).repartition(n_groups, "_qgroup")
 
     def phrase_shard(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        known_plan, idf_map, avgdl = bc.value
-        if idf_map is None:  # distributed idf: rebuild this group's slice
-            idf_map = {
-                t: float(v) for t, v in zip(pdf["term"].to_numpy(), pdf["idf"].to_numpy())
-            }
+        known_plan, avgdl = bc.value
+        idf_map = _group_idf(pdf)
         out_cols = [("qid", "int32"), ("k", "int32"), ("docid", "int64"), ("score", "float64")]
         if emit_windows:
             out_cols += [("win_start", "int64"), ("win_end", "int64")]
@@ -1511,12 +1472,8 @@ def search_index_phrase(
             out["win_end"] = np.concatenate(out_we)
         return pd.DataFrame(out)
 
-    schema = (
-        RESULT_SCHEMA + ", win_start long, win_end long"
-        if emit_windows else RESULT_SCHEMA
-    )
     extra = ["win_start", "win_end"] if emit_windows else []
-    local = blocks.groupBy("_qgroup").applyInPandas(phrase_shard, schema)
+    local = blocks.groupBy("_qgroup").applyInPandas(phrase_shard, RESULT_SCHEMA + windows)
     if keep_boundary_ties:
         w = Window.partitionBy("qid").orderBy(F.desc("score"))
         return (

@@ -46,26 +46,55 @@ def test_exhaustive_topk_is_take_ordered(spark):
     assert audit.codegen_stage_count(res) >= 2
 
 
-def test_phrase_mega_batch_plan_is_broadcast(spark, tmp_path_factory):
-    """The distributed-idf phrase plan must carry the batch's term set
-    as BROADCAST joins (terms⋈dictionary for idf, then term_idf⋈postings
-    as the scan filter) — no shuffle join of the tiny term side, no
-    cartesian product anywhere."""
+@pytest.fixture(scope="module")
+def pos_index(spark, tmp_path_factory):
+    d = str(tmp_path_factory.mktemp("megaidx"))
+    build_index(generate_webtext(spark, 200), d, num_shards=3, store_positions=True)
+    return d
+
+
+def test_phrase_mega_batch_plan_is_broadcast(spark, pos_index):
+    """The phrase plan must carry the batch's term set as BROADCAST
+    joins (terms⋈dictionary for idf, then term_idf⋈postings as the scan
+    filter) — no shuffle join of the tiny term side, no cartesian
+    product anywhere."""
     from semantic_search_engine_spark.operators.query import search_index_phrase
 
-    d = str(tmp_path_factory.mktemp("megaidx"))
-    docs = generate_webtext(spark, 200)
-    build_index(docs, d, num_shards=3, store_positions=True)
-    reader = IndexReader(spark, d)
+    reader = IndexReader(spark, pos_index)
     queries = [
         {"qid": 0, "query": "bababa cecece", "k": 5},
         {"qid": 1, "query": "dadada bababa", "k": 5, "gap": 3},
     ]
-    df = search_index_phrase(reader, queries, distributed_idf=True)
+    df = search_index_phrase(reader, queries)
     plan = audit.physical_plan(df)
     assert plan.count("BroadcastHashJoin") >= 2
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
     df.collect()  # the plan executes
+
+
+def test_wide_batch_terms_arrive_by_broadcast_join(spark, pos_index):
+    """At 1,200 distinct terms neither WAND nor phrase may filter the
+    postings with an ``In``/``InSet`` literal on ``term`` (PySpark
+    builds one per element, one py4j call each): the term set is a
+    LocalTableScan relation that reaches the scan through
+    BroadcastHashJoins on ``term``."""
+    import re
+
+    from semantic_search_engine_spark.fixtures.webtext import vocab
+    from semantic_search_engine_spark.operators.query import (
+        search_index_phrase,
+        search_index_wand,
+    )
+
+    v = vocab()
+    queries = [{"qid": i, "query": f"{v[2 * i]} {v[2 * i + 1]}", "k": 5} for i in range(600)]
+    assert len({t for q in queries for t in q["query"].split()}) >= 1000
+    reader = IndexReader(spark, pos_index)
+    for search in (search_index_wand, search_index_phrase):
+        plan = audit.physical_plan(search(reader, queries))
+        assert not re.search(r"term#\d+ (INSET|IN \()|\bIn(Set)?\(term", plan), search.__name__
+        assert len(re.findall(r"BroadcastHashJoin \[term#\d+\]", plan)) >= 2, search.__name__
+        assert re.search(r"LocalTableScan \[term#\d+\]", plan), search.__name__
 
 
 def test_filter_funnel_is_single_pass(spark):

@@ -327,12 +327,17 @@ def test_bmp_pipeline_entry_deterministic(spark):
 # ---------------------------------------------------------- distributed idf
 
 def test_wand_distributed_idf_identical(spark, tmp_path_factory):
-    """The broadcast-join idf path (mega-batch mode) must produce
-    hash-identical rows to the collected-dict path, including OOV and
-    mixed-known-term queries."""
+    """The broadcast-join idf path (terms⋈dictionary⋈postings, idf
+    rebuilt per kernel group) must produce rows identical to the
+    exhaustive path, whose idf is a driver-collected dictionary lookup,
+    including OOV and mixed-known-term queries."""
     from semantic_search_engine_spark.fixtures.webtext import generate_queries, generate_webtext
     from semantic_search_engine_spark.operators.build import build_index
-    from semantic_search_engine_spark.operators.query import IndexReader, search_index_wand
+    from semantic_search_engine_spark.operators.query import (
+        IndexReader,
+        search_index_exhaustive,
+        search_index_wand,
+    )
 
     d = str(tmp_path_factory.mktemp("idx_didf"))
     build_index(generate_webtext(spark, 2000), d)
@@ -340,24 +345,26 @@ def test_wand_distributed_idf_identical(spark, tmp_path_factory):
     queries = generate_queries(n_queries=40)  # includes the OOV query
     queries.append({"qid": 900, "query": "zzznope the", "k": 7})  # mixed OOV+known
 
-    def rows(**kw):
+    def rows(search):
         return sorted(
             (r["qid"], r["rank"], r["docid"], round(r["score"], 9))
-            for r in search_index_wand(reader, queries, **kw).collect()
+            for r in search(reader, queries).collect()
         )
 
-    assert rows(distributed_idf=True) == rows(distributed_idf=False)
+    assert rows(search_index_wand) == rows(search_index_exhaustive)
 
 
 def test_wand_distributed_idf_wide_batch(spark, tmp_path_factory):
-    """A batch whose distinct-term count (3k) far exceeds a tiny forced
-    SSSE_IDF_COLLECT_MAX auto-switches to the distributed path and
-    still matches the collected path."""
-    import os
-
+    """A batch of 1500 queries with ~3000 distinct terms (many tail or
+    OOV) — past the vectorized-kernel switch — matches the exhaustive
+    path row for row."""
     from semantic_search_engine_spark.fixtures.webtext import generate_webtext, vocab
     from semantic_search_engine_spark.operators.build import build_index
-    from semantic_search_engine_spark.operators.query import IndexReader, search_index_wand
+    from semantic_search_engine_spark.operators.query import (
+        IndexReader,
+        search_index_exhaustive,
+        search_index_wand,
+    )
 
     d = str(tmp_path_factory.mktemp("idx_wide"))
     build_index(generate_webtext(spark, 1000), d)
@@ -372,16 +379,12 @@ def test_wand_distributed_idf_wide_batch(spark, tmp_path_factory):
 
     want = sorted(
         (r["qid"], r["rank"], r["docid"], round(r["score"], 9))
-        for r in search_index_wand(reader, queries, distributed_idf=False).collect()
+        for r in search_index_exhaustive(reader, queries).collect()
     )
-    os.environ["SSSE_IDF_COLLECT_MAX"] = "100"
-    try:
-        got = sorted(
-            (r["qid"], r["rank"], r["docid"], round(r["score"], 9))
-            for r in search_index_wand(reader, queries).collect()  # auto → distributed
-        )
-    finally:
-        del os.environ["SSSE_IDF_COLLECT_MAX"]
+    got = sorted(
+        (r["qid"], r["rank"], r["docid"], round(r["score"], 9))
+        for r in search_index_wand(reader, queries).collect()
+    )
     assert got == want and len(got) > 0
 
 

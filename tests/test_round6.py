@@ -37,13 +37,17 @@ def pos_index6(spark, tmp_path_factory):
 # ------------------------------------------------- mega-batch phrase plan
 
 def test_phrase_mega_batch_identity(spark, pos_index6):
-    """A 1000-phrase batch must return IDENTICAL rows under the
-    driver-collected idf plan and the distributed-idf broadcast-join
-    plan (the mega-batch path): same conjunctive OOV voiding, same
-    per-query gap overrides, same (score desc, docid asc) ranking."""
+    """A 1000-phrase batch through the broadcast-join term plan (the
+    mega-batch path) must return rows IDENTICAL to the driver-local
+    probe, which reads idf from the dictionary on the driver: same
+    conjunctive OOV voiding, same per-query gap overrides, same
+    (score desc, docid asc) ranking."""
+    import pandas as pd
+
     from semantic_search_engine_spark.functions.tokenizer import tokenize
     from semantic_search_engine_spark.operators.query import (
         IndexReader,
+        LocalIndexProbe,
         search_index_phrase,
     )
 
@@ -64,22 +68,26 @@ def test_phrase_mega_batch_identity(spark, pos_index6):
             qid += 1
     assert len(queries) == 1000
     reader = IndexReader(spark, d)
-    collected = (
-        search_index_phrase(reader, queries, distributed_idf=False)
-        .orderBy("qid", "rank")
-        .toPandas()
-    )
     distributed = (
-        search_index_phrase(reader, queries, distributed_idf=True)
+        search_index_phrase(reader, queries)
         .orderBy("qid", "rank")
         .toPandas()
     )
-    assert len(collected) > 1000  # the batch really matched things
-    assert collected.columns.tolist() == distributed.columns.tolist()
-    assert collected.reset_index(drop=True).equals(distributed.reset_index(drop=True))
-    # OOV-voided queries emitted nothing under BOTH plans
+    probe = LocalIndexProbe(d)
+    local = pd.DataFrame(
+        [
+            (q["qid"], *hit)
+            for q in queries
+            for hit in probe.search_phrase(q["query"], k=q["k"], max_gap=q.get("gap", 1))
+        ],
+        columns=["qid", "rank", "docid", "score"],
+    ).astype({"qid": "int32", "rank": "int32", "docid": "int64", "score": "float64"})
+    assert len(local) > 1000  # the batch really matched things
+    assert local.columns.tolist() == distributed.columns.tolist()
+    assert local.reset_index(drop=True).equals(distributed.reset_index(drop=True))
+    # OOV-voided queries emitted nothing on either path
     voided = {q["qid"] for q in queries if q["query"].startswith("zzzunseen ")}
-    assert voided and not (set(collected["qid"]) & voided)
+    assert voided and not (set(local["qid"]) & voided)
 
 
 # ------------------------------------------------- proximity-boost ranking

@@ -137,9 +137,14 @@ def test_wand_vectorized_identical(spark, wand_index7, monkeypatch):
     """The cross-query vectorized kernel must produce rows AND scores
     EXACTLY equal (no rounding) to the per-query WAND loop — same
     float64 accumulation order, same boundary-tie handling — across
-    OOV, mixed-OOV, single-term, and varying-k queries, under both idf
-    plans and both tie contracts."""
-    from semantic_search_engine_spark.operators.query import IndexReader, search_index_wand
+    OOV, mixed-OOV, single-term, and varying-k queries, under both tie
+    contracts — and both must equal the exhaustive path (driver-collected
+    idf) at 1e-9."""
+    from semantic_search_engine_spark.operators.query import (
+        IndexReader,
+        search_index_exhaustive,
+        search_index_wand,
+    )
 
     reader = IndexReader(spark, wand_index7)
     queries = generate_queries(n_queries=120)  # includes the OOV query
@@ -151,10 +156,15 @@ def test_wand_vectorized_identical(spark, wand_index7, monkeypatch):
             for r in search_index_wand(reader, queries, **kw).collect()
         )
 
-    for didf in (False, True):
-        want = rows(vectorized=False, distributed_idf=didf)
-        got = rows(vectorized=True, distributed_idf=didf)
-        assert got == want, f"distributed_idf={didf}"
+    want = rows(vectorized=False)
+    got = rows(vectorized=True)
+    assert got == want
+    rounded = lambda rs: [(q, r, d, round(s, 9)) for q, r, d, s in rs]
+    exhaustive = sorted(
+        (r["qid"], r["rank"], r["docid"], r["score"])
+        for r in search_index_exhaustive(reader, queries).collect()
+    )
+    assert rounded(want) == rounded(exhaustive)
     # boundary-tie contract: every potential top-k member survives in
     # both kernels with identical scores
     assert rows(vectorized=True, keep_boundary_ties=True) == rows(

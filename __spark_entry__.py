@@ -665,11 +665,11 @@ def q_bm25_boolean_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_bm25_wand_vectorized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same answer as q_bm25_wand_topk, served through the CROSS-QUERY
-    VECTORIZED shard kernel (query.py:wand_shard_vec — forced here;
-    auto mode engages it at ≥512-query batches) — puts the mega-batch
-    serving kernel under the DuckDB hash gate, not just the
-    loop-identity pytest."""
+    """Same answer as q_bm25_wand_topk, through the same CROSS-QUERY
+    VECTORIZED shard kernel (query.py:_wand_group_exact), which serves
+    every exact search_index_wand batch; ``vectorized=True`` is still
+    passed and is ignored. Kept as its own entry so the exact kernel
+    answers the DuckDB hash gate under its historical name."""
     q_bm25_wand_topk(spark, sf_dir)  # ensure the cached index exists
     return _serve_wand(spark, _WAND_CACHE[os.path.abspath(sf_dir)], vectorized=True)
 

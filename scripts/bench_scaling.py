@@ -209,11 +209,10 @@ throughput is the 100-TB serving claim; this width makes the per-batch
 fixed costs — known_plan/idf broadcast, per-(query, group) bookkeeping
 in the shard kernels — visible in the q/s delta between the two widths.
 
-NOTE (round 7+): the cross-query VECTORIZED kernel numbers for the
-same widths live in BENCH/BASELINE.md ("Round 7 — cross-query
-vectorized kernel", produced by `scripts/megabatch_vec_bench.py`) —
-re-run that script and re-paste its table if this file ever
-regenerates this section; the numbers above are the LOOP kernel.
+NOTE (round 7+): the numbers above are the per-query LOOP kernel, which
+no longer serves exact batches; the cross-query VECTORIZED kernel that
+does is priced in BENCH/BASELINE.md ("Round 7 — cross-query vectorized
+kernel") and by the `wand_megabatch_vec` bench.py row.
 
 Companion reports: `BENCH/RECALL.md` (pruned-path recall vs brute
 force, the reference's evaluation harness) and `BENCH/ANN_LADDER.md`

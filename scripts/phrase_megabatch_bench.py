@@ -1,6 +1,5 @@
-"""Mega-batch PHRASE serving throughput (the span-family analog of
-megabatch_vec_bench.py): price `search_index_phrase` at 10³/10⁴-phrase
-width over one positions-enabled index.
+"""Mega-batch PHRASE serving throughput: price `search_index_phrase` at
+10³/10⁴-phrase width over one positions-enabled index.
 
 Round-7 context: profiling the 10³-phrase batch (Spark UDF perf
 profiler) showed the shard kernel spending more time in pandas

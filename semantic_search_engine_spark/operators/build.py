@@ -47,7 +47,6 @@ from __future__ import annotations
 import logging
 import os
 import shutil
-import time
 import uuid
 
 log = logging.getLogger(__name__)
@@ -275,8 +274,6 @@ def build_segments(
     #shards built this run.
     """
     spark = docs.sparkSession
-    timing = os.environ.get("SSSE_TIMING") == "1"
-    t0 = time.perf_counter()
     if num_shards is None:
         num_shards = auto_num_shards(docs)
     if batch_shards is None:
@@ -371,8 +368,6 @@ def build_segments(
         "_n",
     ).cache()
     offset_df.count()  # materialize once; batches below reuse the cache
-    if timing:
-        print(f"[build] shards+offsets {time.perf_counter() - t0:.1f}s")
 
     built = 0
     processed = 0
@@ -393,7 +388,6 @@ def build_segments(
             if not batch:
                 continue
             processed += 1
-            t0 = time.perf_counter()
             batch_id = uuid.uuid4().hex[:12]
             stage = os.path.join(index_dir, f"_stage_{batch_id}")
             part = pending_in_range(prepared, finished_df if done else None, lo, hi)
@@ -408,9 +402,6 @@ def build_segments(
                 .applyInPandas(_make_spimi_writer(stage, store_positions), METRICS_SCHEMA)
                 .collect()
             )
-            if timing:
-                print(f"[build] spimi+write batch={len(batch)} {time.perf_counter() - t0:.1f}s")
-                t0 = time.perf_counter()
             # promote staged shard dirs, THEN commit the manifest row —
             # a kill between the two is rebuilt+overwritten on resume
             index_store.promote_staged(stage, index_dir, ("segments", "docmap"), batch)
@@ -434,8 +425,6 @@ def build_segments(
                 )
             index_store.append_manifest(spark, index_dir, rows)
             built += len(batch)
-            if timing:
-                print(f"[build] promote+manifest {time.perf_counter() - t0:.1f}s")
     finally:
         offset_df.unpersist()
     return built
@@ -446,8 +435,6 @@ def finalize_index(spark: SparkSession, index_dir: str) -> dict:
     (no payload decode), then a single decode pass to attach block_max,
     writing postings sorted by (term, block_seq) within each shard so
     parquet min/max stats prune term lookups."""
-    timing = os.environ.get("SSSE_TIMING") == "1"
-    t0 = time.perf_counter()
     manifest = index_store.read_manifest(spark, index_dir)
     if manifest is None:
         raise ValueError(
@@ -493,9 +480,6 @@ def finalize_index(spark: SparkSession, index_dir: str) -> dict:
     )
     dictionary.write.mode("overwrite").parquet(os.path.join(index_dir, "dictionary"))
     dict_df = index_store.read_dictionary(spark, index_dir)
-    if timing:
-        print(f"[finalize] stats+dictionary {time.perf_counter() - t0:.1f}s")
-        t0 = time.perf_counter()
 
     joined = segs.join(dict_df.select("term", "idf"), "term")
     out_cols = [
@@ -541,8 +525,6 @@ def finalize_index(spark: SparkSession, index_dir: str) -> dict:
         .partitionBy("shard")
         .parquet(os.path.join(index_dir, "postings"))
     )
-    if timing:
-        print(f"[finalize] block_max+postings {time.perf_counter() - t0:.1f}s")
     stats = {
         "n_docs": n_docs,
         "avgdl": float(avgdl),

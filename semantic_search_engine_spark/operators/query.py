@@ -9,21 +9,19 @@ Exhaustive (reference-semantics baseline, SURVEY §3.2):
 
 Block-max pruned ("WAND" path, north_star): per-shard groups — the
 index is document-sharded, every doc's postings live in exactly one
-shard — run a batched block-max algorithm per query, sharing a decoded-
-block cache across the whole query batch:
+shard — run the whole query batch against each group, sharing a
+decoded-block cache across the batch:
 
-  1. σ_t   = max block_max of term t in this shard (upper bound on any
-             single-term contribution here)
-  2. seed θ = k-th best exact score of the docs in the single highest-
-             block_max block (exact scoring via cross-term lookup)
-  3. keep block b of term t iff block_max(b) + Σ_{t'≠t} σ_{t'} ≥ θ.
-     Soundness: for a doc d, total(d) ≤ block_max(b_t(d)) +
-     Σ_{t'≠t} σ_{t'} for ANY term t containing d; if every block
-     containing d is dropped, total(d) < θ, so d cannot displace the
-     seeded top-k (ties included — ≥ keeps the boundary).
-  4. candidates = docids of kept blocks; exact-score them — skipped
-     blocks overlapping a candidate are decoded on demand.
-  5. emit per-(qid, shard) top-k; global merge = window row_number ≤ k.
+  1. block cut, per query (:meth:`_GroupBlocks.block_cut`, which holds
+     the soundness proof): seed θ from the query's highest-block_max
+     block, keep a block iff block_max + Σ σ of the other terms ≥ θ.
+  2. exact mode (θ·1.0, the default, any batch width): the union of
+     the batch's kept blocks decodes in ONE vectorized pass and query
+     chunks score through per-term scatter-adds into a (queries × docs)
+     matrix with per-query top-k (:func:`_wand_group_exact`).
+  3. approximate mode (θ·factor): per query, the kept blocks' docs are
+     exact-scored and the top k emitted (:func:`_wand_group_approx`).
+  4. emit per-(qid, group) top-k; global merge = window row_number ≤ k.
 
 Analog of the reference's n-probe bucket pruning + two-level heap
 (/root/reference/src/IVF.py:165-191): block_max metadata plays the
@@ -135,17 +133,92 @@ def _group_idf(pdf: pd.DataFrame) -> dict[str, float]:
     return {t: float(v) for t, v in zip(pdf["term"].to_numpy(), pdf["idf"].to_numpy())}
 
 
-def _topk_window(cand: DataFrame) -> DataFrame:
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("docid"))
+def _topk_window(cand: DataFrame, extra: tuple = (), keep_ties: bool = False) -> DataFrame:
+    """Global per-qid top-k merge of (qid, k, docid, score, *extra) rows.
+
+    Default: row_number over (score desc, docid asc), exactly k rows.
+    ``keep_ties``: rank() over score alone, so every doc tying the k-th
+    score survives for a caller that re-breaks ties under its own order
+    (the ``keep_boundary_ties`` contract of the serving paths)."""
+    if keep_ties:
+        rank = F.rank().over(Window.partitionBy("qid").orderBy(F.desc("score")))
+    else:
+        w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("docid"))
+        rank = F.row_number().over(w)
     return (
-        cand.withColumn("rank", F.row_number().over(w))
+        cand.withColumn("rank", rank)
         .filter(F.col("rank") <= F.col("k"))
-        .select("qid", "rank", "docid", "score")
+        .select("qid", "rank", "docid", "score", *extra)
     )
 
 
 def _empty_result(spark: SparkSession, extra: str = "") -> DataFrame:
     return spark.createDataFrame([], "qid int, rank int, docid long, score double" + extra)
+
+
+def _top_k(docids: np.ndarray, scores: np.ndarray, k: int, keep_ties: bool = False) -> np.ndarray:
+    """Indexes of the top k entries under (score desc, docid asc).
+
+    Head-term queries score 10^5+ candidates, so a full lexsort is the
+    hot spot: select by the k-th score first (boundary ties kept), then
+    order the small set. ``keep_ties`` also returns every entry tying
+    the k-th score (the per-group half of the ``keep_boundary_ties``
+    contract)."""
+    if scores.size > k:
+        kth = np.partition(scores, scores.size - k)[scores.size - k]
+        sel = np.flatnonzero(scores >= kth)
+        order = sel[np.lexsort((docids[sel], -scores[sel]))]
+    else:
+        order = np.lexsort((docids, -scores))
+    return order if keep_ties else order[:k]
+
+
+_KERNEL_COLS = [("qid", "int32"), ("k", "int32"), ("docid", "int64"), ("score", "float64")]
+_WINDOW_COLS = [("win_start", "int64"), ("win_end", "int64")]
+
+
+def _kernel_frame(parts: list[tuple], windows: bool = False) -> pd.DataFrame:
+    """One kernel group's output frame from per-query
+    ``(qid, k, docids, scores[, win_start, win_end])`` parts. Plain
+    arrays are accumulated and ONE DataFrame is built per group: a
+    per-query pd.DataFrame costs ~100 µs of constructor overhead, which
+    at (10³ queries × groups) was a measured ~20% of a mega-batch."""
+    cols = _KERNEL_COLS + (_WINDOW_COLS if windows else [])
+    if not parts:
+        return pd.DataFrame({c: pd.Series(dtype=t) for c, t in cols})
+    qid, k, *arrays = zip(*parts)
+    sizes = [a.size for a in arrays[0]]
+    out = {
+        "qid": np.repeat(np.asarray(qid, dtype=np.int32), sizes),
+        "k": np.repeat(np.asarray(k, dtype=np.int32), sizes),
+    }
+    for (c, _), a in zip(cols[2:], arrays):
+        out[c] = np.concatenate(a)
+    return pd.DataFrame(out)
+
+
+# Kernel groups per shuffle partition. Shards are docid-disjoint, so any
+# union of whole shards is a valid WAND / phrase unit (σ bounds just get
+# looser), and the group count stays bounded as the size-tiered shard
+# count grows with the corpus. Swept at 1001 queries: 4× beats
+# 1×/2×/8×/16× at both 400k and 2M docs (smaller groups balance better
+# and keep tighter σ bounds; beyond that, per-group bookkeeping
+# dominates).
+GROUPS_PER_CPU = 4
+
+
+def _shard_groups(spark: SparkSession, blocks: DataFrame) -> DataFrame:
+    """``blocks`` with a ``_qgroup`` kernel-group key (shard mod the
+    group count), partitioned by it. The explicit partition count
+    matters: AQE's byte-based coalescing would fold this tiny-bytes
+    exchange into ONE partition and serialize the compute-heavy-per-byte
+    Python kernels (measured: the whole query batch in one task); an
+    explicit repartition count is exempt from coalescing and satisfies
+    the later groupBy's clustering, so no second exchange is added."""
+    n_groups = GROUPS_PER_CPU * int(spark.conf.get("spark.sql.shuffle.partitions"))
+    return blocks.withColumn(
+        "_qgroup", F.pmod(F.col("shard"), F.lit(n_groups))
+    ).repartition(n_groups, "_qgroup")
 
 
 def search_index_exhaustive(reader: IndexReader, queries: list[dict]) -> DataFrame:
@@ -337,107 +410,265 @@ def _score_candidates(cands: np.ndarray, per_term: dict, idf_map, avgdl) -> np.n
     return total
 
 
-def _vec_prune_blocks(pdf: "pd.DataFrame", known_plan, idf_map, avgdl) -> "pd.DataFrame":
-    """Batch-exact block-max pruning for the vectorized kernel
-    (VERDICT r07 #2): drop block rows no query can need, BEFORE the
-    one-pass batch decode.
+class _GroupBlocks:
+    """One kernel group's block rows: per-term block positions ordered by
+    first_docid (a term's runs are docid-disjoint, so the concatenation
+    of any subset is sorted-unique) and a lazy per-block decode cache
+    shared by every query of the batch."""
 
-    Per query the rule is literally the loop kernel's: seed θ_q from
-    the query's argmax-block_max block (exclusions applied before
-    seeding, candidates scored EXACTLY via the shared decode cache),
-    then keep block i of term t for q iff
-    ``bm[i] + (sig_sum_q − σ_{t,q}) ≥ θ_q`` — evaluated in the same
-    float expression shape as the loop kernel, per query, and OR-folded
-    over the batch, so the kept set is exactly the UNION of the loop
-    kernel's per-query kept sets (plus all exclusion-term blocks, which
-    the scoring kernel needs to zero excluded docs).
+    def __init__(self, pdf: pd.DataFrame):
+        self.terms = pdf["term"].to_numpy()
+        self.first = pdf["first_docid"].to_numpy()
+        self.last = pdf["last_docid"].to_numpy()
+        self.bm = pdf["block_max"].to_numpy()
+        self._bins = (
+            pdf["docids_bin"].to_numpy(), pdf["tfs_bin"].to_numpy(), pdf["dls_bin"].to_numpy()
+        )
+        self.pos_by_term: dict[str, np.ndarray] = {}
+        for t in np.unique(self.terms):
+            sel = np.flatnonzero(self.terms == t)
+            self.pos_by_term[t] = sel[np.argsort(self.first[sel], kind="stable")]
+        self._decoded: dict[int, tuple] = {}
 
-    Soundness of the pruned SCORE MATRIX (the subtle half): for any
-    query q, every doc d with full score S(d) ≥ θ_q has, for EVERY
-    query term t with d ∈ postings(t), its t-block B kept for q —
-    because bm_B + (sig_sum_q − σ_t) ≥ imp_t(d) + Σ_{t'≠t} σ_{t'} ≥
-    S(d) ≥ θ_q. So every such doc's matrix score is COMPLETE, the seed
-    set guarantees ≥ k complete docs at θ_q > −inf, and any doc with a
-    (possibly incomplete) matrix score has true S < θ_q ≤ kth-true —
-    strictly below every reported score, ties included. Rows and scores
-    therefore stay bit-identical to the unpruned kernel
-    (pytest-asserted). ``SSSE_WAND_VEC_PRUNE=0`` disables."""
-    terms_arr = pdf["term"].to_numpy()
-    first = pdf["first_docid"].to_numpy()
-    last = pdf["last_docid"].to_numpy()
-    bm = pdf["block_max"].to_numpy()
-    d_bins = pdf["docids_bin"].to_numpy()
-    t_bins = pdf["tfs_bin"].to_numpy()
-    l_bins = pdf["dls_bin"].to_numpy()
-    pos_by_term: dict = {}
-    for t in np.unique(terms_arr):
-        sel = np.flatnonzero(terms_arr == t)
-        pos_by_term[t] = sel[np.argsort(first[sel], kind="stable")]
+    def dec(self, i: int) -> tuple:
+        if i not in self._decoded:
+            d_bins, t_bins, l_bins = self._bins
+            self._decoded[i] = decode_block(int(self.first[i]), d_bins[i], t_bins[i], l_bins[i])
+        return self._decoded[i]
 
-    decoded: dict = {}
+    def _overlapping(self, t: str, cands: np.ndarray):
+        """Decoded blocks of term ``t`` whose docid range holds a candidate."""
+        for i in self.pos_by_term.get(t, ()):
+            lo = np.searchsorted(cands, self.first[i])
+            hi = np.searchsorted(cands, self.last[i], side="right")
+            if hi > lo:
+                yield self.dec(int(i))
 
-    def dec(i: int):
-        if i not in decoded:
-            decoded[i] = decode_block(int(first[i]), d_bins[i], t_bins[i], l_bins[i])
-        return decoded[i]
-
-    def per_term_for(cands, qterms):
+    def per_term_for(self, cands: np.ndarray, qterms: list[str]) -> dict:
+        """term → (docids, tfs, dls) covering every candidate's posting
+        of that term (the :func:`_score_candidates` input)."""
         out = {}
         for t in qterms:
-            parts = []
-            for i in pos_by_term.get(t, ()):
-                lo = np.searchsorted(cands, first[i])
-                hi = np.searchsorted(cands, last[i], side="right")
-                if hi > lo:
-                    parts.append(dec(int(i)))
+            parts = list(self._overlapping(t, cands))
             out[t] = (
                 tuple(np.concatenate([p[j] for p in parts]) for j in range(3))
                 if parts else (np.empty(0, np.int64),) * 3
             )
         return out
 
-    def drop_excluded(cands, xs):
+    def drop_excluded(self, cands: np.ndarray, xs: list[str]) -> np.ndarray:
+        """Candidates minus the docs containing ANY exclusion term, reading
+        only the exclusion blocks that overlap the candidates."""
         if not xs or cands.size == 0:
             return cands
-        xparts = []
-        for t in xs:
-            for i in pos_by_term.get(t, ()):
-                lo = np.searchsorted(cands, first[i])
-                hi = np.searchsorted(cands, last[i], side="right")
-                if hi > lo:
-                    xparts.append(dec(int(i))[0])
-        if not xparts:
+        xdocs = [p[0] for t in xs for p in self._overlapping(t, cands)]
+        if not xdocs:
             return cands
-        return cands[~np.isin(cands, np.concatenate(xparts))]
+        return cands[~np.isin(cands, np.concatenate(xdocs))]
 
-    keep = np.zeros(len(pdf), dtype=bool)
-    xterms_all: set = set()
-    for qid, k, qterms, xs in known_plan:
-        xterms_all.update(xs)
-        q_pos = [p for t in qterms for p in pos_by_term.get(t, ())]
+    def block_cut(
+        self, qterms: list[str], xs: list[str], k: int, idf_map: dict, avgdl: float,
+        theta_factor: float = 1.0,
+    ) -> np.ndarray:
+        """Positions of the query's blocks that survive the block-max cut.
+
+          1. σ_t   = max block_max of term t in this group (upper bound on
+                     any single-term contribution here)
+          2. seed θ = k-th best exact score of the docs in the single
+                     highest-block_max block (scored across every query
+                     term). Exclusion applies BEFORE seeding: an excluded
+                     doc's score would inflate θ above the true k-th valid
+                     score and make the cut unsound.
+          3. keep block b of term t iff
+             block_max(b) + Σ_{t'≠t} σ_{t'} ≥ θ·theta_factor.
+
+        Soundness at ``theta_factor=1``: for a doc d, total(d) ≤
+        block_max(b_t(d)) + Σ_{t'≠t} σ_{t'} for ANY term t containing d;
+        if every block containing d is dropped, total(d) < θ, so d cannot
+        displace the seeded top-k (ties included — ≥ keeps the boundary).
+        Fewer than k seed docs leave θ = −inf and every block is kept. A
+        factor > 1 trades recall for fewer decodes (the analog of the
+        reference's n_probe < n_clusters mode); BM25 impacts are positive,
+        so θ > 0 whenever seeded, and the guard only keeps a factor from
+        ever LOWERING a non-positive threshold."""
+        q_pos = [p for t in qterms for p in self.pos_by_term.get(t, ())]
         if not q_pos:
-            continue
+            return np.empty(0, np.int64)
         q_pos = np.asarray(q_pos, dtype=np.int64)
-        sigma = {t: float(bm[pos_by_term[t]].max()) for t in qterms if t in pos_by_term}
+        bm = self.bm
+        sigma = {t: float(bm[self.pos_by_term[t]].max()) for t in qterms if t in self.pos_by_term}
         sig_sum = float(sum(sigma.values()))
-        seed_i = int(q_pos[bm[q_pos].argmax()])
-        seed_docs = drop_excluded(dec(seed_i)[0], xs)
+        seed_docs = self.drop_excluded(self.dec(int(q_pos[bm[q_pos].argmax()]))[0], xs)
         seed_scores = _score_candidates(
-            seed_docs, per_term_for(seed_docs, qterms), idf_map, avgdl
+            seed_docs, self.per_term_for(seed_docs, qterms), idf_map, avgdl
         )
         theta = float(np.sort(seed_scores)[-k]) if seed_scores.size >= k else float("-inf")
-        if theta == float("-inf"):
-            keep[q_pos] = True
-            continue
-        bounds = bm[q_pos] + (sig_sum - np.array([sigma[t] for t in terms_arr[q_pos]]))
-        keep[q_pos] |= bounds >= theta
-    # exclusion terms: the kernel zeroes excluded docs' cells, so every
-    # exclusion-term block must be available
-    for t in xterms_all:
-        keep[pos_by_term.get(t, np.empty(0, np.int64))] = True
+        bounds = bm[q_pos] + (sig_sum - np.array([sigma[t] for t in self.terms[q_pos]]))
+        thr = theta * theta_factor if theta > 0 else theta
+        return q_pos[bounds >= thr]
+
+
+def _vec_prune_blocks(pdf: pd.DataFrame, known_plan, idf_map, avgdl) -> pd.DataFrame:
+    """Batch-exact block-max pruning for the exact kernel: drop the block
+    rows no query can need, BEFORE the one-pass batch decode. The kept
+    set is the union over the batch of each query's
+    :meth:`_GroupBlocks.block_cut` at θ, plus every exclusion-term block
+    (the scoring kernel needs them to zero excluded docs).
+
+    Soundness of the pruned SCORE MATRIX: for any query q, every doc d
+    with full score S(d) ≥ θ_q has, for EVERY query term t with
+    d ∈ postings(t), its t-block B kept for q — because
+    bm_B + (sig_sum_q − σ_t) ≥ imp_t(d) + Σ_{t'≠t} σ_{t'} ≥ S(d) ≥ θ_q.
+    So every such doc's matrix score is COMPLETE, the seed set
+    guarantees ≥ k complete docs at θ_q > −inf, and any doc with a
+    (possibly incomplete) matrix score has true S < θ_q ≤ kth-true —
+    strictly below every reported score, ties included. Rows and scores
+    therefore equal the exhaustive top-k (pytest-asserted)."""
+    g = _GroupBlocks(pdf)
+    keep = np.zeros(len(pdf), dtype=bool)
+    for _, k, qterms, xs in known_plan:
+        keep[g.block_cut(qterms, xs, k, idf_map, avgdl)] = True
+        for t in xs:
+            keep[g.pos_by_term.get(t, np.empty(0, np.int64))] = True
     if keep.all():
         return pdf
     return pdf[keep].reset_index(drop=True)
+
+
+# The exact kernel's (queries × docs) score matrix: at most WAND_VEC_CHUNK
+# queries, and at most WAND_VEC_CELL_BUDGET float64 cells (~256 MB) per
+# task, so a fat shard group shrinks the chunk instead of blowing task
+# memory. Results are chunk-invariant (per-query rows are independent).
+WAND_VEC_CHUNK = 128
+WAND_VEC_CELL_BUDGET = 32_000_000
+
+
+def _wand_group_exact(
+    pdf: pd.DataFrame, known_plan, avgdl: float, keep_ties: bool, chunk: int, cell_budget: int
+) -> pd.DataFrame:
+    """Exact cross-query kernel: block cut (:func:`_vec_prune_blocks`),
+    one decode + one impact pass for the whole group, then chunked
+    (queries × docs) scatter-add scoring with per-query top-k.
+    Scatter-adds run in sorted-term order, the same float64 accumulation
+    sequence as :func:`_score_candidates`, so scores equal the
+    driver-local probe's bit for bit."""
+    idf_map = _group_idf(pdf)
+    pdf = _vec_prune_blocks(pdf, known_plan, idf_map, avgdl)
+    if len(pdf) == 0:
+        return _kernel_frame([])
+    # blocks sorted by term -> each term's postings are one
+    # contiguous slice of the concatenated decode below
+    pdf = pdf.sort_values("term", kind="stable", ignore_index=True)
+    ns = pdf["n"].to_numpy()
+    d_all, tf_all, dl_all, _ = decode_blocks_batch(
+        pdf["first_docid"].to_numpy(), ns,
+        pdf["docids_bin"], pdf["tfs_bin"], pdf["dls_bin"],
+    )
+    terms_arr = pdf["term"].to_numpy()
+    # exclusion-only terms' impacts are computed but never added
+    # (t2q maps positive terms only)
+    idf_rep = np.repeat(
+        np.array([idf_map.get(t, 0.0) for t in terms_arr], dtype=np.float64), ns
+    )
+    imp_all = impact_np(tf_all, dl_all, idf_rep, avgdl)
+    D = np.unique(d_all)  # dense doc axis of the score matrix
+    row_all = np.searchsorted(D, d_all)
+    post_off = np.concatenate([[0], np.cumsum(ns)]).astype(np.int64)
+    blk_new = np.concatenate([[True], terms_arr[1:] != terms_arr[:-1]])
+    t_first = np.flatnonzero(blk_new)
+    t_start = post_off[t_first]
+    t_end = np.concatenate([t_start[1:], [post_off[-1]]])
+    term_slice = {
+        t: (int(s), int(e))
+        for t, s, e in zip(terms_arr[t_first], t_start, t_end)
+    }
+    # reverse index: term -> ordinals of the batch queries using it
+    # (and x2q for exclusion terms — their docs are zeroed after
+    # accumulation)
+    t2q: dict[str, list[int]] = {}
+    x2q: dict[str, list[int]] = {}
+    n_q = len(known_plan)
+    ks = np.empty(n_q, dtype=np.int64)
+    qids = np.empty(n_q, dtype=np.int64)
+    for qi, (qid, k, qterms, xs) in enumerate(known_plan):
+        ks[qi], qids[qi] = k, qid
+        for t in qterms:
+            if t in term_slice:
+                t2q.setdefault(t, []).append(qi)
+        for t in xs:
+            if t in term_slice:
+                x2q.setdefault(t, []).append(qi)
+    t2q_arr = {t: np.asarray(v, dtype=np.int64) for t, v in t2q.items()}
+    sorted_terms = sorted(t2q_arr)
+    x2q_arr = {t: np.asarray(v, dtype=np.int64) for t, v in x2q.items()}
+    chunk = max(1, min(chunk, cell_budget // max(D.size, 1)))
+    parts = []
+    for c0 in range(0, n_q, chunk):
+        c1 = min(c0 + chunk, n_q)
+        scores = np.zeros((c1 - c0, D.size), dtype=np.float64)
+        for t in sorted_terms:  # sorted order == _score_candidates'
+            qs = t2q_arr[t]  # ascending query ordinals
+            qs = qs[np.searchsorted(qs, c0) : np.searchsorted(qs, c1)]
+            if qs.size == 0:
+                continue
+            s, e = term_slice[t]
+            r, v = row_all[s:e], imp_all[s:e]
+            if qs.size >= 2 and r.size * 10 >= D.size:
+                # head term shared by many queries: scatter once
+                # into a dense row, then contiguous SIMD adds per
+                # query (measured ~10× over per-query fancy adds).
+                # Bitwise-identical: the extra cells add +0.0 to
+                # nonnegative partial sums, which is exact.
+                tmp = np.zeros(D.size, dtype=np.float64)
+                tmp[r] = v
+                for q in qs:
+                    scores[q - c0] += tmp
+            else:
+                for q in qs:
+                    scores[q - c0, r] += v
+        # MUST_NOT: zero the excluded docs' cells — the row > 0
+        # filter below then drops them
+        for t in sorted(x2q_arr):
+            qs = x2q_arr[t]
+            qs = qs[np.searchsorted(qs, c0) : np.searchsorted(qs, c1)]
+            if qs.size == 0:
+                continue
+            s, e = term_slice[t]
+            r = row_all[s:e]
+            for q in qs:
+                scores[q - c0, r] = 0.0
+        for j in range(c1 - c0):
+            row = scores[j]
+            pos = np.flatnonzero(row > 0.0)  # docs with >=1 query term
+            if pos.size == 0:
+                continue
+            k = int(ks[c0 + j])
+            docs, vals = D[pos], row[pos]
+            top = _top_k(docs, vals, k, keep_ties)
+            parts.append((qids[c0 + j], k, docs[top], vals[top]))
+    return _kernel_frame(parts)
+
+
+def _wand_group_approx(pdf: pd.DataFrame, known_plan, avgdl: float, theta_factor: float) -> pd.DataFrame:
+    """Approximate per-query kernel (``theta_factor != 1``): each query's
+    block cut at θ·factor, then the kept blocks' docs are exact-scored
+    (skipped blocks overlapping a candidate decode on demand) and the
+    top k emitted. The exact kernel cannot serve this mode: its matrix
+    scores are complete only above the exact θ."""
+    idf_map = _group_idf(pdf)
+    g = _GroupBlocks(pdf)
+    parts = []
+    for qid, k, qterms, xs in known_plan:
+        kept = g.block_cut(qterms, xs, k, idf_map, avgdl, theta_factor)
+        if kept.size == 0:
+            continue
+        cands = g.drop_excluded(np.unique(np.concatenate([g.dec(int(i))[0] for i in kept])), xs)
+        if cands.size == 0:
+            continue
+        scores = _score_candidates(cands, g.per_term_for(cands, qterms), idf_map, avgdl)
+        top = _top_k(cands, scores, k)
+        parts.append((qid, k, cands[top], scores[top]))
+    return _kernel_frame(parts)
 
 
 def search_index_wand(
@@ -447,28 +678,34 @@ def search_index_wand(
     keep_boundary_ties: bool = False,
     vectorized: bool | None = None,
 ) -> DataFrame:
-    """(qid, rank, docid, score) via per-shard block-max pruning.
+    """(qid, rank, docid, score) via per-shard-group block-max pruning.
 
-    One applyInPandas group per shard (not per (qid, shard)) — the
-    whole query batch runs against each shard with a shared decoded-
-    block cache, amortizing group/UDF overhead across queries.
+    One applyInPandas group per bundle of shards (not per (qid, shard)) —
+    the whole query batch runs against each group, amortizing group/UDF
+    overhead across queries. At the default ``theta_factor=1.0`` every
+    batch, whatever its width, runs the exact cross-query kernel
+    (:func:`_wand_group_exact`): the union of the batch's kept blocks
+    decodes in a single vectorized call, per-posting impacts are
+    computed ONCE for the whole batch, and query chunks score through
+    per-term scatter-adds into a (queries × docs) matrix with per-query
+    top-k selection. Rows equal the exhaustive path (pytest-asserted).
 
     ``theta_factor`` > 1 inflates the pruning threshold θ — blocks are
     kept only if bound ≥ θ·factor — trading recall for fewer decodes
     (the analog of the reference's n_probe < n_clusters approximate
-    mode, /root/reference/src/IVF.py:12-20). 1.0 (default) is EXACT:
-    the bound argument in the module docstring guarantees no true
+    mode), served by the per-query kernel (:func:`_wand_group_approx`). 1.0 (default) is EXACT: the
+    bound argument in :meth:`_GroupBlocks.block_cut` guarantees no true
     top-k doc is pruned. Approximate recall is measured in
     scripts/recall_eval.py.
 
     ``keep_boundary_ties`` changes the contract for callers that want
     to re-break ties under their OWN ordering (e.g. external doc_id
-    after a docmap join): every shard emits ALL docs whose score ties
-    the shard's k-th score, and the global merge uses rank() over
+    after a docmap join): every group emits ALL docs whose score ties
+    the group's k-th score, and the global merge uses rank() over
     (score desc) alone, so every doc that could enter the top-k under
     ANY tie-break survives. Soundness: a doc with score strictly below
-    its shard's k-th score already has k better-scored docs in that
-    shard alone, so no tie-break can pull it into the global top-k.
+    its group's k-th score already has k better-scored docs in that
+    group alone, so no tie-break can pull it into the global top-k.
     The default (False) pins ties on internal docid, exactly k rows.
 
     The two dials are mutually exclusive: ``keep_boundary_ties``'s
@@ -477,52 +714,30 @@ def search_index_wand(
     with ``theta_factor != 1.0`` raises rather than silently voiding
     the guarantee.
 
+    ``vectorized`` is accepted for compatibility and ignored: the
+    kernel follows from ``theta_factor`` alone.
+
     The batch's distinct terms reach the scan as a relation, not a
     literal: they become a small Arrow-built DataFrame that is
     broadcast-joined against the dictionary for idf and then against
     the postings as the scan filter. The idf values ride the block rows
-    into each shard kernel, which rebuilds its (tiny) slice of the
+    into each group kernel, which rebuilds its (tiny) slice of the
     term→idf map from the group's own columns, so the driver holds no
     O(terms) state and makes no per-term engine call (see
     :func:`_term_blocks`). A term with no postings in any group simply
     contributes no blocks: an OOV query emits nothing, and an OOV term
     of a mixed query scores nothing.
 
-    ``vectorized`` (default: auto at ≥ ``SSSE_WAND_VECTORIZE_MIN``
-    queries, 512; exact pruning only) switches each shard-group kernel
-    from the per-query WAND loop to one CROSS-QUERY NumPy pass: all the
-    group's blocks decode in a single vectorized call, per-posting
-    impacts are computed ONCE for the whole batch, and query chunks
-    score through per-term scatter-adds into a (docs × queries) matrix
-    with per-column top-k selection. At mega-batch width nearly every
-    term's blocks are needed by SOME query, so block-max pruning saves
-    little while per-(query, group) Python bookkeeping dominates — the
-    measured 10⁴-query ceiling. Row- and score-IDENTICAL to the loop
-    path (pytest-asserted): scatter-adds run in sorted-term order, the
-    same float64 accumulation sequence as ``_score_candidates``, and
-    the θ=1.0 WAND bound guarantees the loop path's pruned candidates
-    can never reach the top-k boundary. Requires ``theta_factor=1.0``
-    (the approximate mode is a pruning dial, which this path has no
-    analog for).
-
     A query dict may carry ``"exclude"`` — Lucene's BooleanQuery
     MUST_NOT: its tokens disqualify any doc containing them, applied
     BEFORE top-k selection so excluded docs never occupy result slots.
     Exclusion terms are never scored; their postings ride the scan so
-    each shard kernel can subtract their docs locally (a doc's
-    postings all live in one shard). In the loop kernel the subtract
-    reads only exclusion blocks overlapping the candidate range and
-    ALSO applies to the θ seed (an excluded doc's score would inflate
-    θ above the true k-th valid score and make the block cut unsound);
-    the vectorized kernel zeroes the excluded docs' score cells — the
-    same surviving rows bit-for-bit. An OOV exclude term excludes
-    nothing; plain and MUST_NOT queries mix freely in one batch, in
-    both kernels."""
-    if vectorized and theta_factor != 1.0:
-        raise ValueError(
-            "vectorized scoring is exhaustive-exact and has no analog of "
-            f"the theta_factor pruning dial (got {theta_factor})"
-        )
+    each group kernel can subtract their docs locally (a doc's postings
+    all live in one shard). The subtract also applies to the θ seed
+    (see :meth:`_GroupBlocks.block_cut`); the exact kernel then zeroes
+    the excluded docs' score cells, the approximate one drops them from
+    its candidates. An OOV exclude term excludes nothing; plain and
+    MUST_NOT queries mix freely in one batch."""
     if keep_boundary_ties and theta_factor != 1.0:
         raise ValueError(
             "keep_boundary_ties guarantees every possible tie-break survivor "
@@ -531,12 +746,6 @@ def search_index_wand(
         )
     spark = reader.spark
     plan, terms = _query_plan(queries)
-    # Lucene-style MUST_NOT: a query dict's "exclude" string tokenizes
-    # to terms whose presence disqualifies a doc. Exclusion terms are
-    # never scored — their postings ride along in the scan only so each
-    # shard kernel can subtract their docs (a doc's postings all live
-    # in one shard, so exclusion is group-local exact). An OOV exclude
-    # term excludes nothing.
     xmap = {
         int(q["qid"]): sorted(set(tokenize(q.get("exclude", ""))))
         for q in queries
@@ -545,10 +754,6 @@ def search_index_wand(
     known_plan = [(q, k, ts, xmap[q]) for q, k, ts in plan if ts]
     if not known_plan:
         return _empty_result(spark)
-    if vectorized is None:
-        vectorized = theta_factor == 1.0 and len(known_plan) >= int(
-            os.environ.get("SSSE_WAND_VECTORIZE_MIN", "512")
-        )
     # ship the query plan as a broadcast variable (cached once per
     # executor) rather than a UDF closure (re-shipped per task) —
     # matters once the batch reaches 10^5+ queries. Previous calls'
@@ -557,316 +762,27 @@ def search_index_wand(
     # broadcast resident on executors.
     avgdl = float(reader.stats["avgdl"])
     bc = _rotate_plan_broadcast(spark, (known_plan, avgdl))
+    # exclusion terms join the term relation too (their idf is ignored;
+    # only their docids are read in the kernels)
+    blocks = _shard_groups(
+        spark, _term_blocks(reader, reader.postings(), sorted(set(terms) | set(xterms)))
+    )
+    if theta_factor == 1.0:
+        # the matrix bounds are read here, on the driver, and travel with
+        # the closure — the executors see the caller's settings
+        chunk, cell_budget = WAND_VEC_CHUNK, WAND_VEC_CELL_BUDGET
 
-    # Bundle shards into at most ~4×parallelism task groups: shards are
-    # docid-disjoint, so any union of whole shards is a valid WAND unit
-    # (σ bounds just get looser); group count stays bounded as the
-    # size-tiered shard count grows with the corpus. Swept at 1001
-    # queries on this host: 4×cpus beats 1×/2×/8×/16× at both 400k and
-    # 2M docs (smaller groups balance better and keep tighter σ bounds;
-    # beyond that, per-(query, group) bookkeeping dominates).
-    per_cpu = int(os.environ.get("SSSE_WAND_GROUPS_PER_CPU", "4"))
-    n_groups = per_cpu * int(spark.conf.get("spark.sql.shuffle.partitions"))
-    # term filter + idf as broadcast JOINS (terms⋈dictionary, then
-    # ⋈postings). Exclusion terms join too (their idf is ignored; only
-    # their docids are read in the kernels).
-    blocks = _term_blocks(reader, reader.postings(), sorted(set(terms) | set(xterms)))
-    # explicit partition count: AQE's byte-based coalescing would fold
-    # this tiny-bytes exchange into ONE partition and serialize the
-    # compute-heavy-per-byte Python kernels (measured: the whole query
-    # batch in one task); an explicit repartition count is exempt from
-    # coalescing and satisfies the groupBy's clustering, so no second
-    # exchange is added. Group count/keys (and results) are unchanged.
-    blocks = blocks.withColumn(
-        "_qgroup", F.pmod(F.col("shard"), F.lit(n_groups))
-    ).repartition(n_groups, "_qgroup")
+        def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
+            known_plan, avgdl = bc.value
+            return _wand_group_exact(pdf, known_plan, avgdl, keep_boundary_ties, chunk, cell_budget)
+    else:
 
-    def wand_shard(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        known_plan, avgdl = bc.value
-        idf_map = _group_idf(pdf)
-        if len(pdf) == 0:
-            return pd.DataFrame(
-                {c: pd.Series(dtype=t) for c, t in
-                 [("qid", "int32"), ("k", "int32"), ("docid", "int64"), ("score", "float64")]}
-            )
-        terms_arr = pdf["term"].to_numpy()
-        first = pdf["first_docid"].to_numpy()
-        last = pdf["last_docid"].to_numpy()
-        bm = pdf["block_max"].to_numpy()
-        d_bins = pdf["docids_bin"].to_numpy()
-        t_bins = pdf["tfs_bin"].to_numpy()
-        l_bins = pdf["dls_bin"].to_numpy()
+        def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
+            known_plan, avgdl = bc.value
+            return _wand_group_approx(pdf, known_plan, avgdl, theta_factor)
 
-        # per-term block positions ordered by first_docid (runs are disjoint)
-        pos_by_term: dict[str, np.ndarray] = {}
-        for t in np.unique(terms_arr):
-            sel = np.flatnonzero(terms_arr == t)
-            pos_by_term[t] = sel[np.argsort(first[sel], kind="stable")]
-
-        decoded: dict[int, tuple] = {}
-
-        def dec(i: int):
-            if i not in decoded:
-                decoded[i] = decode_block(int(first[i]), d_bins[i], t_bins[i], l_bins[i])
-            return decoded[i]
-
-        def per_term_for(cands: np.ndarray, qterms: list[str]) -> dict:
-            out = {}
-            for t in qterms:
-                parts = []
-                for i in pos_by_term.get(t, ()):  # ordered by first_docid
-                    lo = np.searchsorted(cands, first[i])
-                    hi = np.searchsorted(cands, last[i], side="right")
-                    if hi > lo:
-                        parts.append(dec(int(i)))
-                if parts:
-                    out[t] = tuple(np.concatenate([p[j] for p in parts]) for j in range(3))
-                else:
-                    out[t] = (np.empty(0, np.int64),) * 3
-            return out
-
-        def drop_excluded(cands: np.ndarray, xs: list[str]) -> np.ndarray:
-            """Remove candidates containing ANY exclusion term, reading
-            only exclusion blocks that overlap the candidate range (the
-            same block-subset select as per_term_for)."""
-            if not xs or cands.size == 0:
-                return cands
-            xparts = []
-            for t in xs:
-                for i in pos_by_term.get(t, ()):
-                    lo = np.searchsorted(cands, first[i])
-                    hi = np.searchsorted(cands, last[i], side="right")
-                    if hi > lo:
-                        xparts.append(dec(int(i))[0])
-            if not xparts:
-                return cands
-            return cands[~np.isin(cands, np.concatenate(xparts))]
-
-        # plain-array accumulation, one DataFrame per group (not per
-        # query) — the phrase kernel's measured constructor-overhead fix
-        out_qid, out_k, out_docid, out_score = [], [], [], []
-        for qid, k, qterms, xs in known_plan:
-            q_pos = [p for t in qterms for p in pos_by_term.get(t, ())]
-            if not q_pos:
-                continue
-            q_pos = np.asarray(q_pos, dtype=np.int64)
-            sigma = {t: float(bm[pos_by_term[t]].max()) for t in qterms if t in pos_by_term}
-            sig_sum = float(sum(sigma.values()))
-
-            # seed θ from the highest-block_max block of this query.
-            # Exclusion applies BEFORE seeding: an excluded doc's score
-            # would inflate θ above the true k-th valid score and make
-            # the block cut unsound.
-            seed_i = int(q_pos[bm[q_pos].argmax()])
-            seed_docs = drop_excluded(dec(seed_i)[0], xs)
-            seed_scores = _score_candidates(seed_docs, per_term_for(seed_docs, qterms), idf_map, avgdl)
-            theta = float(np.sort(seed_scores)[-k]) if seed_scores.size >= k else float("-inf")
-
-            bounds = bm[q_pos] + (sig_sum - np.array([sigma[t] for t in terms_arr[q_pos]]))
-            # BM25 impacts are positive, so θ>0 whenever seeded; guard
-            # anyway so factor>1 never LOWERS a non-positive threshold
-            thr = theta * theta_factor if theta > 0 else theta
-            kept = q_pos[bounds >= thr]
-            if kept.size == 0:
-                continue
-            if len(qterms) == 1:
-                # one term: runs are docid-disjoint and ordered by
-                # first_docid → concatenation is already sorted-unique,
-                # and the decoded (tf, dl) runs score directly (no
-                # candidate re-lookup)
-                decs = [dec(int(i)) for i in kept]
-                cands = np.concatenate([d0 for d0, _, _ in decs])
-                tfs = np.concatenate([d1 for _, d1, _ in decs])
-                dls = np.concatenate([d2 for _, _, d2 in decs])
-                if xs:
-                    keep_m = np.isin(cands, drop_excluded(cands, xs))
-                    cands, tfs, dls = cands[keep_m], tfs[keep_m], dls[keep_m]
-                if cands.size == 0:
-                    continue
-                scores = impact_np(tfs, dls, idf_map[qterms[0]], avgdl)
-            else:
-                cands = np.unique(np.concatenate([dec(int(i))[0] for i in kept]))
-                cands = drop_excluded(cands, xs)
-                if cands.size == 0:
-                    continue
-                scores = _score_candidates(cands, per_term_for(cands, qterms), idf_map, avgdl)
-            if scores.size > k:
-                # head-term queries score 10^5+ candidates: full lexsort
-                # is the per-query hot spot. Select by the k-th score
-                # (keeping boundary ties), then order the small set —
-                # identical (score desc, docid asc) result.
-                kth = np.partition(scores, scores.size - k)[scores.size - k]
-                sel = np.flatnonzero(scores >= kth)
-                cands, scores = cands[sel], scores[sel]
-            order = np.lexsort((cands, -scores))
-            if not keep_boundary_ties:
-                order = order[:k]
-            out_qid.append(np.full(order.size, qid, dtype=np.int32))
-            out_k.append(np.full(order.size, k, dtype=np.int32))
-            out_docid.append(cands[order])
-            out_score.append(scores[order])
-        if not out_qid:
-            return pd.DataFrame(
-                {c: pd.Series(dtype=t) for c, t in
-                 [("qid", "int32"), ("k", "int32"), ("docid", "int64"), ("score", "float64")]}
-            )
-        return pd.DataFrame(
-            {
-                "qid": np.concatenate(out_qid),
-                "k": np.concatenate(out_k),
-                "docid": np.concatenate(out_docid),
-                "score": np.concatenate(out_score),
-            }
-        )
-
-    def wand_shard_vec(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        """Cross-query vectorized scorer (mega-batch mode): one decode +
-        one impact pass for the whole group, then chunked (docs ×
-        queries) scatter-add scoring. Sorted-term add order keeps the
-        float64 accumulation sequence identical to _score_candidates,
-        so rows AND scores match the loop kernel bit-for-bit."""
-        known_plan, avgdl = bc.value
-        idf_map = _group_idf(pdf)
-        empty = pd.DataFrame(
-            {c: pd.Series(dtype=t) for c, t in
-             [("qid", "int32"), ("k", "int32"), ("docid", "int64"), ("score", "float64")]}
-        )
-        if len(pdf) == 0:
-            return empty
-        if os.environ.get("SSSE_WAND_VEC_PRUNE", "1") != "0":
-            pdf = _vec_prune_blocks(pdf, known_plan, idf_map, avgdl)
-            if len(pdf) == 0:
-                return empty
-        # blocks sorted by term -> each term's postings are one
-        # contiguous slice of the concatenated decode below
-        pdf = pdf.sort_values("term", kind="stable", ignore_index=True)
-        ns = pdf["n"].to_numpy()
-        d_all, tf_all, dl_all, _ = decode_blocks_batch(
-            pdf["first_docid"].to_numpy(), ns,
-            pdf["docids_bin"], pdf["tfs_bin"], pdf["dls_bin"],
-        )
-        terms_arr = pdf["term"].to_numpy()
-        # exclusion-only terms' impacts are computed but never added
-        # (t2q maps positive terms only)
-        idf_rep = np.repeat(
-            np.array([idf_map.get(t, 0.0) for t in terms_arr], dtype=np.float64), ns
-        )
-        imp_all = impact_np(tf_all, dl_all, idf_rep, avgdl)
-        D = np.unique(d_all)  # dense doc axis of the score matrix
-        row_all = np.searchsorted(D, d_all)
-        post_off = np.concatenate([[0], np.cumsum(ns)]).astype(np.int64)
-        blk_new = np.concatenate([[True], terms_arr[1:] != terms_arr[:-1]])
-        t_first = np.flatnonzero(blk_new)
-        t_start = post_off[t_first]
-        t_end = np.concatenate([t_start[1:], [post_off[-1]]])
-        term_slice = {
-            t: (int(s), int(e))
-            for t, s, e in zip(terms_arr[t_first], t_start, t_end)
-        }
-        # reverse index: term -> ordinals of the batch queries using it
-        # (and x2q for exclusion terms — their docs are zeroed after
-        # accumulation, the vectorized form of the loop path's subtract)
-        t2q: dict[str, list[int]] = {}
-        x2q: dict[str, list[int]] = {}
-        n_q = len(known_plan)
-        ks = np.empty(n_q, dtype=np.int64)
-        qids = np.empty(n_q, dtype=np.int64)
-        for qi, (qid, k, qterms, xs) in enumerate(known_plan):
-            ks[qi], qids[qi] = k, qid
-            for t in qterms:
-                if t in term_slice:
-                    t2q.setdefault(t, []).append(qi)
-            for t in xs:
-                if t in term_slice:
-                    x2q.setdefault(t, []).append(qi)
-        t2q_arr = {t: np.asarray(v, dtype=np.int64) for t, v in t2q.items()}
-        sorted_terms = sorted(t2q_arr)
-        x2q_arr = {t: np.asarray(v, dtype=np.int64) for t, v in x2q.items()}
-        # chunk width bounds the matrix at |D| × chunk doubles — and the
-        # cell budget bounds it ABSOLUTELY (default 32M cells ≈ 256 MB
-        # float64 per task): a fat shard group at 100-TB scale shrinks
-        # the chunk instead of blowing task memory. Results are
-        # chunk-invariant (per-query columns are independent).
-        chunk = max(1, int(os.environ.get("SSSE_WAND_VEC_CHUNK", "128")))
-        cell_budget = int(os.environ.get("SSSE_WAND_VEC_CELL_BUDGET", "32000000"))
-        chunk = max(1, min(chunk, cell_budget // max(D.size, 1)))
-        out_qid, out_k, out_docid, out_score = [], [], [], []
-        for c0 in range(0, n_q, chunk):
-            c1 = min(c0 + chunk, n_q)
-            scores = np.zeros((c1 - c0, D.size), dtype=np.float64)
-            for t in sorted_terms:  # sorted order == the loop path's
-                qs = t2q_arr[t]  # ascending query ordinals
-                qs = qs[np.searchsorted(qs, c0) : np.searchsorted(qs, c1)]
-                if qs.size == 0:
-                    continue
-                s, e = term_slice[t]
-                r, v = row_all[s:e], imp_all[s:e]
-                if qs.size >= 2 and r.size * 10 >= D.size:
-                    # head term shared by many queries: scatter once
-                    # into a dense row, then contiguous SIMD adds per
-                    # query (measured ~10× over per-query fancy adds).
-                    # Bitwise-identical: the extra cells add +0.0 to
-                    # nonnegative partial sums, which is exact.
-                    tmp = np.zeros(D.size, dtype=np.float64)
-                    tmp[r] = v
-                    for q in qs:
-                        scores[q - c0] += tmp
-                else:
-                    for q in qs:
-                        scores[q - c0, r] += v
-            # MUST_NOT: zero the excluded docs' cells — the col > 0
-            # filter below then drops them, matching the loop kernel's
-            # candidate subtraction row-for-row
-            for t in sorted(x2q_arr):
-                qs = x2q_arr[t]
-                qs = qs[np.searchsorted(qs, c0) : np.searchsorted(qs, c1)]
-                if qs.size == 0:
-                    continue
-                s, e = term_slice[t]
-                r = row_all[s:e]
-                for q in qs:
-                    scores[q - c0, r] = 0.0
-            for j in range(c1 - c0):
-                col = scores[j]
-                k = int(ks[c0 + j])
-                pos = np.flatnonzero(col > 0.0)  # docs with >=1 query term
-                if pos.size == 0:
-                    continue
-                if pos.size > k:
-                    vals = col[pos]
-                    kth = np.partition(vals, vals.size - k)[vals.size - k]
-                    sel = pos[vals >= kth]  # boundary ties kept
-                else:
-                    sel = pos
-                sc, cands = col[sel], D[sel]
-                order = np.lexsort((cands, -sc))
-                if not keep_boundary_ties:
-                    order = order[:k]
-                out_qid.append(np.full(order.size, qids[c0 + j], dtype=np.int32))
-                out_k.append(np.full(order.size, k, dtype=np.int32))
-                out_docid.append(cands[order])
-                out_score.append(sc[order])
-        if not out_qid:
-            return empty
-        return pd.DataFrame(
-            {
-                "qid": np.concatenate(out_qid),
-                "k": np.concatenate(out_k),
-                "docid": np.concatenate(out_docid),
-                "score": np.concatenate(out_score),
-            }
-        )
-
-    kernel = wand_shard_vec if vectorized else wand_shard
     local = blocks.groupBy("_qgroup").applyInPandas(kernel, RESULT_SCHEMA)
-    if keep_boundary_ties:
-        w = Window.partitionBy("qid").orderBy(F.desc("score"))
-        return (
-            local.withColumn("rank", F.rank().over(w))
-            .filter(F.col("rank") <= F.col("k"))
-            .select("qid", "rank", "docid", "score")
-        )
-    return _topk_window(local)
+    return _topk_window(local, keep_ties=keep_boundary_ties)
 
 
 def _phrase_survivors(
@@ -1308,23 +1224,13 @@ def search_index_phrase(
     # unpersist-previous-calls discipline (_LIVE_PLAN_BROADCASTS)
     bc = _rotate_plan_broadcast(spark, (known_plan, avgdl))
 
-    per_cpu = int(os.environ.get("SSSE_WAND_GROUPS_PER_CPU", "4"))
-    n_groups = per_cpu * int(spark.conf.get("spark.sql.shuffle.partitions"))
-    blocks = _term_blocks(reader, reader.postings(positions=True), used)
-    # explicit count: exempt from AQE coalescing (see search_index_wand)
-    blocks = blocks.withColumn(
-        "_qgroup", F.pmod(F.col("shard"), F.lit(n_groups))
-    ).repartition(n_groups, "_qgroup")
+    blocks = _shard_groups(spark, _term_blocks(reader, reader.postings(positions=True), used))
 
     def phrase_shard(key, pdf: pd.DataFrame) -> pd.DataFrame:
         known_plan, avgdl = bc.value
         idf_map = _group_idf(pdf)
-        out_cols = [("qid", "int32"), ("k", "int32"), ("docid", "int64"), ("score", "float64")]
-        if emit_windows:
-            out_cols += [("win_start", "int64"), ("win_end", "int64")]
-        empty = pd.DataFrame({c: pd.Series(dtype=t) for c, t in out_cols})
         if len(pdf) == 0:
-            return empty
+            return _kernel_frame([], emit_windows)
         # blocks grouped per term, NOT decoded yet — decode is driven
         # rarest-first per query below. Runs are first_docid-ordered and
         # docid-disjoint, so any subset's concatenation is sorted-unique.
@@ -1387,12 +1293,7 @@ def search_index_phrase(
                 use_counts[t] >= 2 and (e - s) <= 8 * use_counts[t]
             )
 
-        # accumulate plain arrays and build ONE DataFrame per group —
-        # a per-query pd.DataFrame costs ~100 µs of constructor
-        # overhead, which at (10³ queries × n_groups) was a measured
-        # ~20% of the whole mega-batch (the wand_shard_vec discipline)
-        out_qid, out_k, out_docid, out_score = [], [], [], []
-        out_ws, out_we = [], []
+        parts = []
         for qid, k, words, gap, uo in known_plan:
             qterms = sorted(set(words))
             if any(t not in by_term for t in qterms):
@@ -1443,50 +1344,14 @@ def search_index_phrase(
                 _score_candidates(hits, per_term, idf_map, avgdl),
                 slack, qterms, idf_map, proximity_boost,
             )
-            if scores.size > k:
-                kth = np.partition(scores, scores.size - k)[scores.size - k]
-                sel = np.flatnonzero(scores >= kth)
-                hits, scores = hits[sel], scores[sel]
-                if ws is not None:
-                    ws, we = ws[sel], we[sel]
-            order = np.lexsort((hits, -scores))
-            if not keep_boundary_ties:
-                order = order[:k]
-            out_qid.append(np.full(order.size, qid, dtype=np.int32))
-            out_k.append(np.full(order.size, k, dtype=np.int32))
-            out_docid.append(hits[order])
-            out_score.append(scores[order])
-            if ws is not None:
-                out_ws.append(ws[order])
-                out_we.append(we[order])
-        if not out_qid:
-            return empty
-        out = {
-            "qid": np.concatenate(out_qid),
-            "k": np.concatenate(out_k),
-            "docid": np.concatenate(out_docid),
-            "score": np.concatenate(out_score),
-        }
-        if emit_windows:
-            out["win_start"] = np.concatenate(out_ws)
-            out["win_end"] = np.concatenate(out_we)
-        return pd.DataFrame(out)
+            top = _top_k(hits, scores, k, keep_boundary_ties)
+            part = (qid, k, hits[top], scores[top])
+            parts.append(part + (ws[top], we[top]) if emit_windows else part)
+        return _kernel_frame(parts, emit_windows)
 
-    extra = ["win_start", "win_end"] if emit_windows else []
+    extra = ("win_start", "win_end") if emit_windows else ()
     local = blocks.groupBy("_qgroup").applyInPandas(phrase_shard, RESULT_SCHEMA + windows)
-    if keep_boundary_ties:
-        w = Window.partitionBy("qid").orderBy(F.desc("score"))
-        return (
-            local.withColumn("rank", F.rank().over(w))
-            .filter(F.col("rank") <= F.col("k"))
-            .select("qid", "rank", "docid", "score", *extra)
-        )
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("docid"))
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= F.col("k"))
-        .select("qid", "rank", "docid", "score", *extra)
-    )
+    return _topk_window(local, extra, keep_boundary_ties)
 
 
 class LocalIndexProbe:
@@ -1659,11 +1524,7 @@ class LocalIndexProbe:
                 if cands.size == 0:
                     return []
         scores = _score_candidates(cands, per_term, idf_map, self.avgdl)
-        if scores.size > k:
-            kth = np.partition(scores, scores.size - k)[scores.size - k]
-            sel = np.flatnonzero(scores >= kth)
-            cands, scores = cands[sel], scores[sel]
-        order = np.lexsort((cands, -scores))[:k]
+        order = _top_k(cands, scores, k)
         return [(r + 1, int(cands[i]), float(scores[i])) for r, i in enumerate(order)]
 
     def search_qld(
@@ -1698,11 +1559,7 @@ class LocalIndexProbe:
                 )
                 dl_arr[hit] = dl[pos_c[hit]].astype(np.float64)
         scores += L * np.log(mu / (dl_arr + mu))
-        if scores.size > k:
-            kth = np.partition(scores, scores.size - k)[scores.size - k]
-            sel = np.flatnonzero(scores >= kth)
-            cands, scores = cands[sel], scores[sel]
-        order = np.lexsort((cands, -scores))[:k]
+        order = _top_k(cands, scores, k)
         return [(r + 1, int(cands[i]), float(scores[i])) for r, i in enumerate(order)]
 
     def search_phrase(
@@ -1761,13 +1618,7 @@ class LocalIndexProbe:
             _score_candidates(hits, per_term, idf_map, self.avgdl),
             slack, qterms, idf_map, proximity_boost,
         )
-        if scores.size > k:
-            kth = np.partition(scores, scores.size - k)[scores.size - k]
-            sel = np.flatnonzero(scores >= kth)
-            hits, scores = hits[sel], scores[sel]
-            if ws is not None:
-                ws, we = ws[sel], we[sel]
-        order = np.lexsort((hits, -scores))[:k]
+        order = _top_k(hits, scores, k)
         if ws is not None:
             return [
                 (r + 1, int(hits[i]), float(scores[i]), int(ws[i]), int(we[i]))

@@ -134,12 +134,12 @@ def wand_index7(spark, tmp_path_factory):
 
 
 def test_wand_vectorized_identical(spark, wand_index7, monkeypatch):
-    """The cross-query vectorized kernel must produce rows AND scores
-    EXACTLY equal (no rounding) to the per-query WAND loop — same
-    float64 accumulation order, same boundary-tie handling — across
-    OOV, mixed-OOV, single-term, and varying-k queries, under both tie
-    contracts — and both must equal the exhaustive path (driver-collected
-    idf) at 1e-9."""
+    """The exact WAND kernel must equal the exhaustive path (driver-
+    collected idf) at 1e-9 across OOV, mixed-OOV, single-term, and
+    varying-k queries; under the boundary-tie contract it must return
+    those rows plus only rows tying their query's k-th score; and its
+    rows must not depend on the score matrix's chunk width."""
+    from semantic_search_engine_spark.operators import query
     from semantic_search_engine_spark.operators.query import (
         IndexReader,
         search_index_exhaustive,
@@ -156,49 +156,48 @@ def test_wand_vectorized_identical(spark, wand_index7, monkeypatch):
             for r in search_index_wand(reader, queries, **kw).collect()
         )
 
-    want = rows(vectorized=False)
-    got = rows(vectorized=True)
-    assert got == want
+    want = rows()
     rounded = lambda rs: [(q, r, d, round(s, 9)) for q, r, d, s in rs]
     exhaustive = sorted(
         (r["qid"], r["rank"], r["docid"], r["score"])
         for r in search_index_exhaustive(reader, queries).collect()
     )
     assert rounded(want) == rounded(exhaustive)
-    # boundary-tie contract: every potential top-k member survives in
-    # both kernels with identical scores
-    assert rows(vectorized=True, keep_boundary_ties=True) == rows(
-        vectorized=False, keep_boundary_ties=True
-    )
+    # boundary-tie contract: every plain row survives with its score,
+    # and every extra row ties its query's k-th score (rank() numbers
+    # tied rows alike, so ranks are not compared)
+    plain = {(q, d, s) for q, _, d, s in want}
+    tied = {(q, d, s) for q, _, d, s in rows(keep_boundary_ties=True)}
+    assert plain <= tied
+    k_of = {q["qid"]: q["k"] for q in queries}
+    kth = {q: s for q, r, _, s in want if r == k_of[q]}
+    assert all(s == kth[q] for q, _, s in tied - plain)
     # chunk invariance: a tiny absolute cell budget forces the kernel
-    # to shrink its (docs x queries) chunk per shard group; per-query
-    # columns are independent, so the rows must not move at all.
-    monkeypatch.setenv("SSSE_WAND_VEC_CELL_BUDGET", "2000")
-    assert rows(vectorized=True) == rows(vectorized=False)
+    # to shrink its (queries x docs) chunk per shard group; per-query
+    # rows of the matrix are independent, so results must not move at all.
+    monkeypatch.setattr(query, "WAND_VEC_CELL_BUDGET", 2000)
+    assert rows() == want
 
 
-def test_wand_vectorized_auto_threshold(spark, wand_index7, monkeypatch):
-    """Auto mode flips to the vectorized kernel at the env threshold
-    and stays identical; theta_factor != 1.0 refuses vectorized."""
+def test_wand_vectorized_auto_threshold(spark, wand_index7):
+    """The ``vectorized`` keyword is accepted and ignored: every value
+    gives the same rows (one exact kernel at every width), and the
+    approximate ``theta_factor`` mode still runs, with or without it."""
     from semantic_search_engine_spark.operators.query import IndexReader, search_index_wand
 
     reader = IndexReader(spark, wand_index7)
     queries = generate_queries(n_queries=30)
-    monkeypatch.setenv("SSSE_WAND_VECTORIZE_MIN", "10")  # force auto-vec
-    auto = sorted(
-        (r["qid"], r["rank"], r["docid"], r["score"])
-        for r in search_index_wand(reader, queries).collect()
-    )
-    loop = sorted(
-        (r["qid"], r["rank"], r["docid"], r["score"])
-        for r in search_index_wand(reader, queries, vectorized=False).collect()
-    )
-    assert auto == loop
-    # approximate pruning keeps the loop kernel even above the threshold
-    # (must not raise — vectorized resolves to False on its own)
-    search_index_wand(reader, queries, theta_factor=1.5).collect()
-    with pytest.raises(ValueError, match="vectorized"):
-        search_index_wand(reader, queries, vectorized=True, theta_factor=1.5)
+
+    def rows(**kw):
+        return sorted(
+            (r["qid"], r["rank"], r["docid"], r["score"])
+            for r in search_index_wand(reader, queries, **kw).collect()
+        )
+
+    auto = rows()
+    assert rows(vectorized=False) == auto
+    assert rows(vectorized=True) == auto
+    assert rows(theta_factor=1.5, vectorized=True) == rows(theta_factor=1.5)
 
 
 # ------------------------------------------------- tiered LSM compaction
@@ -969,7 +968,8 @@ def test_wand_must_not_semantics(spark, wand_index7):
     """exclude='...' must drop exactly the docs containing any exclude
     term BEFORE top-k (reference: the unfiltered full ranking minus the
     exclude term's posting docs), be a no-op for OOV excludes, void a
-    fully-excluded query, and stay loop/vectorized identical."""
+    fully-excluded query, and equal the driver-local probe on a mixed
+    batch."""
     from semantic_search_engine_spark.operators.query import IndexReader, search_index_wand
 
     from semantic_search_engine_spark.functions.tokenizer import tokenize
@@ -1019,13 +1019,14 @@ def test_wand_must_not_semantics(spark, wand_index7):
         {"qid": 2, "query": "bababa", "k": 5, "exclude": "bababa"},   # voids itself
         {"qid": 3, "query": "cecece dadada", "k": 7},                  # no exclude
     ]
-    loop = search_index_wand(reader, batch, vectorized=False).collect()
-    vec = search_index_wand(reader, batch, vectorized=True).collect()
-    key = lambda r: (r["qid"], r["rank"])
-    assert sorted(((r["qid"], r["rank"], r["docid"], r["score"]) for r in loop)) == \
-           sorted(((r["qid"], r["rank"], r["docid"], r["score"]) for r in vec))
+    got = search_index_wand(reader, batch).collect()
+    assert sorted((r["qid"], r["rank"], r["docid"], r["score"]) for r in got) == sorted(
+        (q["qid"], rank, d, sc)
+        for q in batch
+        for rank, d, sc in probe.search(q["query"], k=q["k"], exclude=q.get("exclude", ""))
+    )
     by_q = {}
-    for r in loop:
+    for r in got:
         by_q.setdefault(r["qid"], []).append(r)
     assert 2 not in by_q  # fully excluded query emits nothing
     # OOV exclude == no exclude
@@ -1334,7 +1335,7 @@ def test_exhaustive_and_probe_batch_excludes(spark, wand_index7):
         (r["qid"], r["rank"], r["docid"], r["score"]) for r in res.collect()
     )
     assert rows(search_index_exhaustive(reader, batch)) == \
-           rows(search_index_wand(reader, batch, vectorized=False))
+           rows(search_index_wand(reader, batch))
     # no-exclude path: still identical to WAND (the pre-existing invariant)
     plain = [{"qid": 0, "query": "bababa cecece", "k": 10}]
     assert rows(search_index_exhaustive(reader, plain)) == \

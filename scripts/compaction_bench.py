@@ -2,19 +2,19 @@
 compaction — the serving-side case for `compact_generations`.
 
 Continuous micro-batch ingest (`ingest_generation(finalize=False)`)
-leaves one generation of shards per batch; every probe's `_load_terms`
-then touches one postings partition per shard a term lands in, so
-serving read-amplification grows linearly with ingested-generation
-count. Size-tiered compaction (operators/build.py:compact_generations)
-k-way-merges whole tiers — O(tier) per merge, never O(index) — and
-bounds live generations at O(tier_k · log N), which is what keeps probe
-latency FLAT no matter how many micro-batches ever arrived.
+leaves one generation of shards per batch; a fresh probe then reads
+one postings file per shard, so serving read-amplification grows
+linearly with ingested-generation count. Size-tiered compaction
+(operators/build.py:compact_generations) k-way-merges whole tiers —
+O(tier) per merge, never O(index) — and bounds live generations at
+O(tier_k · log N), which is what keeps probe latency FLAT no matter how
+many micro-batches ever arrived.
 
 This script ingests the SAME deterministic 60k-doc corpus as 4 / 16 /
 64 generations (one shard per generation: shard count == generation
 count, the cleanest read-amplification axis), finalizes, and measures
 driver-local cold serving (fresh `LocalIndexProbe`, 50 queries
-sequentially — every query pays its terms' per-shard parquet reads)
+sequentially — its misses read each shard's postings file once)
 plus a 50-query distributed WAND batch; then compacts (tier_k=4),
 re-finalizes, and measures again. Corpus content is identical at every
 point, so latency deltas are pure fragmentation.

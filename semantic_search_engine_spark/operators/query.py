@@ -45,6 +45,7 @@ from ..functions.bm25 import impact_np
 from ..functions.tokenizer import tokenize
 from ..sources import index_store
 from .codec import decode_block, decode_blocks_batch, decode_positions
+from .lru import key_ranges, raised_cache_cap, touch_and_trim
 
 RESULT_SCHEMA = "qid int, k int, docid long, score double"
 
@@ -1354,6 +1355,98 @@ def search_index_phrase(
     return _topk_window(local, extra, keep_boundary_ties)
 
 
+# Bound on the Arrow bytes of the postings fragments one LocalIndexProbe
+# keeps resident between calls; past it the least recently used fragments
+# are dropped (the most recent one always stays). Within one call every
+# fragment the miss set touches is resident; the dictionary arrays and
+# the term LRU are not counted.
+PROBE_RESIDENT_BYTES = 256 << 20
+_PAYLOADS = ("docids_bin", "tfs_bin", "dls_bin")
+
+
+class StaleIndexError(RuntimeError):
+    """A ``LocalIndexProbe`` needed index files that were replaced after
+    it opened (a later ``finalize_index`` rewrote them)."""
+
+
+class _Fragment:
+    """One postings file as ``LocalIndexProbe`` reads it: once read, its
+    rows in (term, first_docid) order with the term column folded into
+    the distinct ``terms`` and the row each one's run ``starts`` at (one
+    trailing end row)."""
+
+    __slots__ = ("frag", "terms", "starts", "fd", "n", "bins", "nbytes")
+
+    def __init__(self, frag):
+        self.frag = frag
+        self.terms = None
+
+    def read(self, columns: list[str]) -> None:
+        """Make the file resident, sorting it only if its rows are
+        not already in (term, first_docid) order."""
+        import pyarrow.compute as pc
+
+        tbl = self.frag.to_table(columns=columns).combine_chunks()
+        term, fd = tbl.column("term").chunk(0), tbl.column("first_docid").chunk(0)
+        if len(term) > 1 and not pc.all(pc.or_(
+            pc.less(term[:-1], term[1:]),
+            pc.and_(pc.equal(term[:-1], term[1:]), pc.less(fd[:-1], fd[1:])),
+        )).as_py():
+            tbl = tbl.sort_by([("term", "ascending"), ("first_docid", "ascending")])
+            tbl = tbl.combine_chunks()
+            term = tbl.column("term").chunk(0)
+        new_run = pc.not_equal(term[1:], term[:-1]).to_numpy(zero_copy_only=False)
+        starts = np.flatnonzero(np.concatenate([[len(term) > 0], new_run]))
+        self.terms = term.take(starts).to_numpy(zero_copy_only=False)
+        self.starts = np.append(starts, len(term))
+        self.fd = tbl.column("first_docid").to_numpy()
+        self.n = tbl.column("n").to_numpy()
+        self.bins = {}
+        for c in columns:
+            if not c.endswith("_bin"):
+                continue
+            a = tbl.column(c).chunk(0)
+            width = np.int64 if a.type == "large_binary" else np.int32
+            offs = np.frombuffer(a.buffers()[1], dtype=width)[a.offset : a.offset + len(a) + 1]
+            self.bins[c] = (offs, a.buffers()[2] or b"")
+        self.nbytes = tbl.nbytes
+
+    def payload(self, col: str, a: int, b: int):
+        """Rows [a, b) of a binary column as ONE buffer: the values'
+        concatenation, zero-copy."""
+        offs, data = self.bins[col]
+        return data[int(offs[a]) : int(offs[b])]
+
+    def drop(self) -> None:
+        self.terms = self.starts = self.fd = self.n = self.bins = None
+
+
+def _decode_slices(slices: list[tuple], positions: bool) -> tuple:
+    """One term's (docids, tfs, dls, positions|None, run_starts|None)
+    from its ``(fragment, a, b)`` row slices. Slices in first_docid order
+    concatenate sorted when their docid ranges are disjoint. Compaction
+    merges the smallest generations of a size class, which need not be
+    docid-adjacent, so one shard's run can span another's; then the
+    blocks are ordered one by one. A block never spans generations, so
+    blocks in first_docid order decode sorted."""
+    slices = sorted(slices, key=lambda s: s[0].fd[s[1]])
+    fd = np.concatenate([f.fd[a:b] for f, a, b in slices]) if slices else []
+    n = np.concatenate([f.n[a:b] for f, a, b in slices]) if slices else []
+    if len(fd) > 1 and not np.all(fd[1:] > fd[:-1]):
+        order = np.argsort(fd, kind="stable")
+        fd, n = fd[order], n[order]
+        rows = [(f, r) for f, a, b in slices for r in range(a, b)]
+        slices = [(f, r, r + 1) for f, r in (rows[i] for i in order)]
+    d, tf, dl, _ = decode_blocks_batch(
+        fd, n, *([f.payload(c, a, b) for f, a, b in slices] for c in _PAYLOADS)
+    )
+    if positions:
+        pos = decode_positions(tf, [f.payload("positions_bin", a, b) for f, a, b in slices])
+    else:
+        pos = (None, None)
+    return (d, tf, dl) + pos
+
+
 class LocalIndexProbe:
     """Driver-local single-query BM25 top-k over a saved index
     directory — the text-side twin of ``similarity.LocalIVFProbe``.
@@ -1361,11 +1454,14 @@ class LocalIndexProbe:
     The distributed paths are the right plan for query BATCHES (one
     amortized job), but a single k≤10 lookup pays the ~0.3 s Spark
     job-scheduling floor for a 10-row answer. This probe serves it
-    entirely in-process, reading per query ONLY the query terms'
-    posting blocks: a pyarrow dataset scan with a ``term isin`` filter
-    (parquet row-group statistics skip non-matching row groups — the
-    postings are term-sorted per shard, the same pruning the Spark
-    scan pushes down), decoded by the shared vectorized varint codec
+    entirely in-process as a keyed read of resident postings fragments.
+    On the first term miss it reads the dictionary's (term, idf) once
+    into sorted arrays. A postings file is read the first time a miss
+    needs it and kept resident in (term, first_docid) order (sorted on
+    read only if the file is not already) under an LRU bounded by
+    ``PROBE_RESIDENT_BYTES`` between calls. A miss is then
+    binary-searched slices of the resident fragments, put in first_docid
+    order, decoded by the shared vectorized varint codec
     and scored by the SAME ``_score_candidates`` kernel with the same
     sorted-term float64 accumulation order and the same
     (score desc, docid asc) tie rule — so rows are identical to
@@ -1373,11 +1469,28 @@ class LocalIndexProbe:
     (pytest-asserted). The reference's serving shape
     (/root/reference/src/IVF.py:159-191: memmap, touch only probed
     regions, heapq the candidates) re-derived for the text index.
+    Opening reads only the stats row.
 
     An LRU cache keeps the most recent ``cache_terms`` terms' decoded
     postings (and idf) resident, so hot-term serving converges to pure
-    in-RAM scoring; memory is bounded by the cached terms' posting
-    sizes, not the corpus."""
+    in-RAM scoring. Known-OOV terms cache as ``None``; a term cached
+    without positions is decoded again when a phrase first needs them.
+
+    A probe reads the index version it opened. Once a later
+    ``finalize_index`` replaces the files, it answers from what it
+    already holds, and a read of a replaced file raises
+    :class:`StaleIndexError` naming the index directory — never rows
+    that mix versions. Open a new probe to see the new version.
+
+    Work counters, plain integers: ``term_hits`` / ``term_misses``
+    (requested terms served from / loaded into the term LRU),
+    ``fragments_read`` (postings file reads) and ``resident_bytes``."""
+
+    # class defaults, so a probe built without __init__ works too
+    index_dir: str | None = None
+    term_hits = term_misses = fragments_read = resident_bytes = 0
+    _frags: list | None = None  # the postings files, listed on the first miss
+    _dict_terms = _dict_idf = None
 
     def __init__(self, index_dir: str, cache_terms: int = 4096, arrow_threads: int | None = None):
         from collections import OrderedDict
@@ -1401,64 +1514,85 @@ class LocalIndexProbe:
         self.has_positions = bool(stats.get("has_positions", False))
         self._post = ds.dataset(f"{index_dir}/postings", format="parquet")
         self._dict = ds.dataset(f"{index_dir}/dictionary", format="parquet")
-        self._ds = ds
         # term -> (idf, docids, tfs, dls, positions|None, run_starts|None)
         # | None for known-OOV terms
         self._cache: "OrderedDict[str, tuple | None]" = OrderedDict()
         self._cache_cap = cache_terms
 
+    def _read(self, fn, *args, **kwargs):
+        """``fn(*args, **kwargs)``, with a vanished index file reported
+        as the probe having outlived its index version."""
+        try:
+            return fn(*args, **kwargs)
+        except FileNotFoundError as e:
+            raise StaleIndexError(
+                f"the index at {self.index_dir!r} was rewritten after this "
+                f"LocalIndexProbe opened it; open a new LocalIndexProbe ({e})"
+            ) from e
+
+    def _idf(self, terms: list[str]) -> dict[str, float]:
+        """idf of each known term among the sorted ``terms``."""
+        if self._dict_terms is None:
+            tbl = self._read(self._dict.to_table, columns=["term", "idf"]).sort_by("term")
+            self._dict_terms = tbl.column("term").to_numpy(zero_copy_only=False)
+            self._dict_idf = tbl.column("idf").to_numpy()
+        lo, hi = key_ranges(self._dict_terms, terms)
+        return {t: float(self._dict_idf[a]) for t, a, b in zip(terms, lo, hi) if b > a}
+
+    def _fragments(self) -> list[_Fragment]:
+        """The postings files, listed on the first miss."""
+        if self._frags is None:
+            from collections import OrderedDict
+
+            names = self._post.schema.names
+            self._columns = ["term", "first_docid", "n", *_PAYLOADS] + (
+                ["positions_bin"] if "positions_bin" in names else []
+            )
+            self._resident: "OrderedDict[int, _Fragment]" = OrderedDict()
+            self._frags = [_Fragment(f) for f in self._post.get_fragments()]
+        return self._frags
+
+    def _postings(self, terms: list[str], positions: bool) -> dict[str, tuple]:
+        """term -> (docids, tfs, dls, positions|None, run_starts|None)
+        for the sorted known ``terms``, sliced from the resident
+        fragments (reading in the ones not resident)."""
+        slices: dict[str, list] = {t: [] for t in terms}
+        for i, f in enumerate(self._fragments()):
+            if f.terms is None:
+                self._read(f.read, self._columns)
+                self.fragments_read += 1
+                self.resident_bytes += f.nbytes
+            self._resident[i] = f
+            self._resident.move_to_end(i)
+            lo, hi = key_ranges(f.terms, terms)
+            for t, a, b in zip(terms, f.starts[lo], f.starts[hi]):
+                if b > a:
+                    slices[t].append((f, a, b))
+        out = {t: _decode_slices(ps, positions) for t, ps in slices.items()}
+        while self.resident_bytes > PROBE_RESIDENT_BYTES and len(self._resident) > 1:
+            _, f = self._resident.popitem(last=False)
+            self.resident_bytes -= f.nbytes
+            f.drop()
+        return out
+
     def _load_terms(self, terms: list[str], positions: bool = False) -> dict[str, tuple]:
+        cache = self._cache
         miss = [
             t for t in terms
-            if t not in self._cache
-            or (positions and self._cache[t] is not None and self._cache[t][4] is None)
+            if t not in cache
+            or (positions and cache[t] is not None and cache[t][4] is None)
         ]
+        self.term_hits += len(terms) - len(miss)
+        self.term_misses += len(miss)
         if miss:
-            ds = self._ds
-            idf_tbl = self._dict.to_table(
-                columns=["term", "idf"], filter=ds.field("term").isin(miss)
-            )
-            idf_by_term = dict(
-                zip(idf_tbl.column("term").to_pylist(), idf_tbl.column("idf").to_pylist())
-            )
-            cols = ["term", "first_docid", "n", "docids_bin", "tfs_bin", "dls_bin"]
-            if positions:
-                cols.append("positions_bin")
-            blk = (
-                self._post.to_table(columns=cols, filter=ds.field("term").isin(miss))
-                .to_pandas()
-                # ONE stable sort + binary-searched slices per term — a
-                # per-term equality scan is O(rows × terms) and dominates
-                # wide-miss loads (same fix as LocalIVFProbe._load_buckets)
-                .sort_values(["term", "first_docid"], kind="stable", ignore_index=True)
-            )
-            term_sorted = blk["term"].to_numpy()
+            keys = sorted(set(miss))
+            idf = self._idf(keys)
+            known = [t for t in keys if t in idf]
+            blocks = self._postings(known, positions) if known else {}
             for t in miss:
-                if t not in idf_by_term:
-                    self._cache[t] = None  # OOV — cached as such
-                    continue
-                lo = np.searchsorted(term_sorted, t)
-                hi = np.searchsorted(term_sorted, t, side="right")
-                rows = blk.iloc[lo:hi]
-                d, tf, dl, _ = decode_blocks_batch(
-                    rows["first_docid"].to_numpy(), rows["n"].to_numpy(),
-                    rows["docids_bin"], rows["tfs_bin"], rows["dls_bin"],
-                )
-                # shards are docid-disjoint and runs are first_docid-
-                # ordered, so the concatenation is already sorted-unique
-                if positions:
-                    pos, rs = decode_positions(tf, rows["positions_bin"])
-                else:
-                    pos, rs = None, None
-                self._cache[t] = (float(idf_by_term[t]), d, tf, dl, pos, rs)
-        out = {}
-        for t in terms:
-            self._cache.move_to_end(t)
-            if self._cache[t] is not None:
-                out[t] = self._cache[t]
-        while len(self._cache) > self._cache_cap:
-            self._cache.popitem(last=False)
-        return out
+                cache[t] = ((idf[t],) + blocks[t]) if t in idf else None  # OOV cached as such
+        values = touch_and_trim(cache, terms, self._cache_cap)
+        return {t: v for t, v in zip(terms, values) if v is not None}
 
     def search_batch(
         self,
@@ -1468,10 +1602,9 @@ class LocalIndexProbe:
     ) -> list[list[tuple[int, int, float]]]:
         """Per-query results for a BATCH of queries, identical rows to
         ``search`` on each — the union of the batch's distinct terms
-        preloads in bounded chunks (one term-filtered parquet read per
-        chunk, so the isin filter and decode working set stay bounded
-        at mega-batch width) before any scoring: a cold batch pays
-        O(terms/chunk) parquet round-trips instead of one per query.
+        preloads in bounded chunks (one keyed read per chunk, so the
+        decode working set stays bounded at mega-batch width) before
+        any scoring: a cold batch reads each postings fragment once.
         The LRU cap is raised for the batch's duration so preloaded
         terms survive until scored, then restored and trimmed — the
         ``LocalIVFProbe.search_batch`` discipline. The middle ground
@@ -1483,8 +1616,6 @@ class LocalIndexProbe:
         same contract as ``search(exclude=)``; exclude terms join the
         preload union so a batch with excludes still pays the same
         bounded chunked reads."""
-        from .lru import raised_cache_cap
-
         if excludes is not None and len(excludes) != len(queries):
             raise ValueError(
                 f"excludes must parallel queries: {len(excludes)} != {len(queries)}"
@@ -1678,8 +1809,7 @@ def local_snippets(
     returns the same rows extended with ``(doc_key, snippet)``. The
     internal docids resolve through the index's own ``docmap`` and the
     text through a ``doc-key``-filtered pyarrow read of the stored
-    corpus (row-group stats prune non-matching groups — the same
-    touch-only-probed-regions discipline as ``_load_terms``).
+    corpus (row-group stats prune non-matching groups).
     Tokenization is the pinned Python ``tokenize`` (pytest-pinned to
     the JVM ``tokens_col``), and the slice/clamp algebra is the same
     expression, so the snippet STRING is identical to the distributed

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..functions.localdf import local_df
 from ..functions.partitioning import spread_small_scan
+from .lru import raised_cache_cap, split_by_key, touch_and_trim
 
 
 def dot_expr(a, b) -> "F.Column":
@@ -395,32 +396,15 @@ class LocalIVFProbe:
                 filter=self._ds.field("bucket").isin(miss),
             )
             ids_all = t.column(self.id_col).to_numpy()
-            bk = t.column("bucket").to_numpy()
             m_all = _flat_fixed_width(
                 t.column(self.vec_col), self.centroids.shape[1], np.float64
             )
             if len(ids_all):
                 m_all /= np.linalg.norm(m_all, axis=1, keepdims=True)
-            # split per bucket via ONE stable sort + binary-searched
-            # slices — a per-bucket equality scan is O(rows × buckets)
-            # and dominated wide-miss loads (batched serving probes
-            # most of the index at small cluster counts)
-            order = (
-                np.argsort(bk, kind="stable") if len(ids_all) else np.empty(0, np.int64)
-            )
-            bk_sorted = bk[order] if len(ids_all) else bk
-            for b in miss:  # empty buckets (no partition dir) → 0 rows
-                lo = np.searchsorted(bk_sorted, b)
-                hi = np.searchsorted(bk_sorted, b, side="right")
-                sel = order[lo:hi]
+            # empty buckets (no partition dir) → 0 rows
+            for b, sel in zip(miss, split_by_key(t.column("bucket").to_numpy(), miss)):
                 self._cache[b] = (ids_all[sel], m_all[sel])
-        out = []
-        for b in buckets:
-            self._cache.move_to_end(b)
-            out.append(self._cache[b])
-        while len(self._cache) > self._cache_cap:
-            self._cache.popitem(last=False)
-        return out
+        return touch_and_trim(self._cache, buckets, self._cache_cap)
 
     def search_batch(
         self, query_vecs, k: int = 10, n_probe: int = 4
@@ -453,8 +437,6 @@ class LocalIVFProbe:
         # distinct buckets than the LRU cap would evict them before use
         # (pure wasted I/O, per-query fallback loads). Raise the cap
         # for the batch's duration, restore + trim after.
-        from .lru import raised_cache_cap
-
         with raised_cache_cap(self, len(union)):
             for i in range(0, len(union), 32):
                 self._load_buckets(union[i : i + 32])
@@ -910,26 +892,12 @@ class LocalIVFPQProbe:
                 filter=self._ds.field("bucket").isin(miss),
             )
             ids_all = t.column(self.id_col).to_numpy()
-            bk = t.column("bucket").to_numpy()
             codes_all = _flat_fixed_width(
                 t.column("codes"), self.codebooks.shape[0], np.int64
             )
-            order = (
-                np.argsort(bk, kind="stable") if len(ids_all) else np.empty(0, np.int64)
-            )
-            bk_sorted = bk[order] if len(ids_all) else bk
-            for b in miss:
-                lo = np.searchsorted(bk_sorted, b)
-                hi = np.searchsorted(bk_sorted, b, side="right")
-                sel = order[lo:hi]
+            for b, sel in zip(miss, split_by_key(t.column("bucket").to_numpy(), miss)):
                 self._cache[b] = (ids_all[sel], codes_all[sel])
-        out = []
-        for b in buckets:
-            self._cache.move_to_end(b)
-            out.append(self._cache[b])
-        while len(self._cache) > self._cache_cap:
-            self._cache.popitem(last=False)
-        return out
+        return touch_and_trim(self._cache, buckets, self._cache_cap)
 
     def search_batch(
         self, query_vecs, k: int = 10, n_probe: int = 4, rerank: int | None = None,
@@ -938,8 +906,6 @@ class LocalIVFPQProbe:
         batch's probe union preloads in bounded chunks with the LRU
         cap raised for the batch (the shared ``raised_cache_cap``
         discipline of the other batched probes)."""
-        from .lru import raised_cache_cap
-
         qm = np.asarray(query_vecs, dtype=np.float64)
         if qm.size == 0:
             return []
@@ -1022,26 +988,12 @@ class LocalIVFPQProbe:
                 filter=self._ds.field("bucket").isin(miss),
             )
             ids_all = t.column(self.id_col).to_numpy()
-            bk = t.column("bucket").to_numpy()
             m_all = _flat_fixed_width(t.column(self.vec_col), self._dim, np.float64)
-            order = (
-                np.argsort(bk, kind="stable") if len(ids_all) else np.empty(0, np.int64)
-            )
-            bk_sorted = bk[order] if len(ids_all) else bk
-            for b in miss:
-                lo = np.searchsorted(bk_sorted, b)
-                hi = np.searchsorted(bk_sorted, b, side="right")
-                sel = order[lo:hi]
+            for b, sel in zip(miss, split_by_key(t.column("bucket").to_numpy(), miss)):
                 bids, bm = ids_all[sel], m_all[sel]
                 o2 = np.argsort(bids)
                 self._vcache[b] = (bids[o2], bm[o2])
-        out = []
-        for b in buckets:
-            self._vcache.move_to_end(b)
-            out.append(self._vcache[b])
-        while len(self._vcache) > self._vcache_cap:
-            self._vcache.popitem(last=False)
-        return out
+        return touch_and_trim(self._vcache, buckets, self._vcache_cap)
 
 
 # ---------------------------------------------------------------- LSH

@@ -46,6 +46,19 @@ def tokens_col(text_col) -> "F.Column":
     return F.filter(parts, lambda t: t != F.lit(""))
 
 
+def token_windows(ts, n: int) -> "F.Column":
+    """array<struct<0: string, …, n-1: string>> of the adjacent n-token
+    windows of token array ``ts``: the ``arrays_zip`` of the n shifted
+    slices ``slice(ts, j+1, size(ts)-n+1)``, empty when ``ts`` has fewer
+    than n tokens. Each window is one struct, so a lambda over the
+    windows reads only its own variable (``s["0"]`` … ``s[str(n-1)]``)
+    and ``ts`` is evaluated n times per row, not once per window."""
+    m = F.size(ts) - F.lit(n - 1)
+    return F.when(
+        m > 0, F.arrays_zip(*[F.slice(ts, j + 1, m) for j in range(n)])
+    ).otherwise(F.arrays_zip(*[F.array().cast("array<string>")] * n))
+
+
 # DuckDB-dialect SQL fragment computing the same token list, used by the
 # oracle side of __spark_entry__ so both engines share one pinned rule.
 DUCKDB_TOKENS_SQL = (

@@ -223,7 +223,7 @@ def _spimi_one_shard(
     return metrics
 
 
-DOCS_PER_SHARD = int(os.environ.get("SSSE_DOCS_PER_SHARD", 15_000))
+DOCS_PER_SHARD = 15_000
 
 
 def auto_num_shards(docs: DataFrame) -> int:

@@ -361,7 +361,14 @@ def search_index_qld(
         decode_rows, "qid int, k int, term string, docid long, tf long, dl long"
     ).persist()
     try:
-        cf_rows = decoded.groupBy("term").agg(F.sum("tf").alias("cf")).collect()
+        # decoded holds a (term, docid) row once per query holding the
+        # term: cf sums each posting once
+        cf_rows = (
+            decoded.dropDuplicates(["term", "docid"])
+            .groupBy("term")
+            .agg(F.sum("tf").alias("cf"))
+            .collect()
+        )
         cf_map = {r["term"]: float(r["cf"]) for r in cf_rows}
         l_map = {
             qid: float(sum(1 for t in ts if t in cf_map))

@@ -9,7 +9,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..functions.tokenizer import tokens_col
+from ..functions.tokenizer import token_windows, tokens_col
 
 # Pinned per-language marker sets for the heuristic language-ID.
 LANG_MARKERS = {
@@ -125,16 +125,12 @@ def doc_fingerprints(docs: DataFrame, id_col: str = "doc_id", text_col: str = "t
 def _ngram_array(ts, n: int) -> "F.Column":
     """array<string> of the adjacent-token n-grams of token array
     ``ts`` (space-joined), empty when the doc has fewer than n
-    tokens — sequence + transform, fully inside codegen."""
-    return F.when(
-        F.size(ts) >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.size(ts) - F.lit(n - 1)),
-            lambda i: F.concat_ws(
-                " ", *[F.element_at(ts, i + F.lit(j)) for j in range(n)]
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    tokens — one ``transform`` over :func:`token_windows`, linear in
+    the row and fully inside codegen."""
+    return F.transform(
+        token_windows(ts, n),
+        lambda s: F.concat_ws(" ", *[s[str(j)] for j in range(n)]),
+    )
 
 
 def ngram_counts(
@@ -142,7 +138,8 @@ def ngram_counts(
 ) -> DataFrame:
     """(ngram, cnt, df) — adjacent-token n-gram collocation counts:
     total occurrences and document frequency. Pure higher-order
-    expressions (sequence + transform inside codegen, one explode) —
+    expressions (one ``transform`` over :func:`token_windows` inside
+    codegen, linear in the doc, then one explode) —
     the corpus-wide aggregate cousin of the per-query positions
     adjacency check, and the n-gram statistics primitive of a
     training-data pipeline. Single scan, one shuffle (the groupBy)."""
@@ -163,22 +160,33 @@ def bigram_counts(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text
     )
 
 
+def _sorted_dups(s) -> tuple["F.Column", "F.Column", "F.Column"]:
+    """(m, eq, dup) over a SORTED array ``s`` of size m: ``eq[i]`` =
+    s[i] == s[i+1] (length m-1, one ``zip_with`` over the shifted self)
+    and ``dup[i]`` = s[i] equals a sorted neighbour (``eq`` shifted
+    right OR shifted left; ``[false]`` when m < 2). Every lambda reads
+    only its own variables, so both are linear in m."""
+    m = F.size(s)
+    eq = F.when(
+        m >= 2,
+        F.zip_with(F.slice(s, 1, m - 1), F.slice(s, 2, m - 1), lambda a, b: a == b),
+    ).otherwise(F.array().cast("array<boolean>"))
+    edge = F.array(F.lit(False))
+    dup = F.zip_with(F.concat(edge, eq), F.concat(eq, edge), lambda a, b: a | b)
+    return m, eq, dup
+
+
 def _run_stats(ts, n: int) -> tuple["F.Column", "F.Column", "F.Column"]:
     """(m, top_run, dup_occ) column exprs over the doc's sorted n-gram
     array: total n-gram occurrences, the longest equal run (= the top
     n-gram's count), and the number of occurrences with an equal
     sorted neighbor (= occurrences of n-grams appearing >1 time).
-    Pure codegen: array_sort + zip_with equal-neighbor flags + linear
-    aggregate scans — no explode, no shuffle."""
+    Pure codegen: array_sort + :func:`_sorted_dups`' shifted
+    ``zip_with`` flags, a linear ``aggregate`` over them for the run
+    and a ``filter`` count for the duplicates — no explode, no shuffle."""
     if n < 1:
         raise ValueError(f"n must be >= 1, got {n}")
-    s = F.array_sort(_ngram_array(ts, n))
-    m = F.size(s)
-    # eq[i] (1-based): sorted[i] == sorted[i+1], length m-1
-    eq = F.when(
-        m >= 2,
-        F.zip_with(F.slice(s, 1, m - 1), F.slice(s, 2, m - 1), lambda a, b: a == b),
-    ).otherwise(F.array().cast("array<boolean>"))
+    m, eq, dup = _sorted_dups(F.array_sort(_ngram_array(ts, n)))
     # longest equal run: linear scan with (current, best) accumulator
     top_run = F.aggregate(
         eq,
@@ -191,22 +199,7 @@ def _run_stats(ts, n: int) -> tuple["F.Column", "F.Column", "F.Column"]:
         ),
         lambda acc: acc["best"],
     )
-    # occurrence i is a duplicate iff it equals a sorted neighbor
-    # (F.get is 0-based and null-safe at the array edges)
-    dup_occ = F.when(
-        m >= 2,
-        F.aggregate(
-            F.sequence(F.lit(1), m),
-            F.lit(0),
-            lambda acc, i: acc
-            + F.when(
-                F.coalesce(F.get(eq, i - 2), F.lit(False))
-                | F.coalesce(F.get(eq, i - 1), F.lit(False)),
-                F.lit(1),
-            ).otherwise(F.lit(0)),
-        ),
-    ).otherwise(F.lit(0))
-    return m, top_run, dup_occ
+    return m, top_run, F.size(F.filter(dup, lambda d: d))
 
 
 def top_ngram_frac_col(text_col, n: int = 2) -> "F.Column":
@@ -232,12 +225,16 @@ def repetition_stats(
     funnel (the published C4/Gopher repetition filters).
 
     100-TB shape: per-doc signals must not shuffle — this is ONE
-    scan→project with ZERO shuffles. The n-gram array is sorted
-    in-doc (``array_sort``), equal-neighbor flags come from one
-    ``zip_with`` over the shifted self, the longest run is a linear
-    ``aggregate`` scan and duplicate occurrences are positions with
-    an equal neighbor — all codegen expressions, no explode, no
-    groupBy, no Python. The DuckDB oracle recomputes both fractions
+    scan→project with ZERO shuffles. The n-grams are one
+    ``transform`` over :func:`token_windows` (the ``arrays_zip`` of n
+    shifted token slices), sorted in-doc (``array_sort``);
+    equal-neighbor flags come from one ``zip_with`` over the shifted
+    self, the longest run is an ``aggregate`` over those flags, and
+    duplicate occurrences are the positions where the flags shifted
+    left or right are set (:func:`_sorted_dups`). No lambda reads an
+    outer expression, so the per-row cost is linear in the page (up
+    to the sort) — all codegen expressions, no explode, no groupBy,
+    no Python. The DuckDB oracle recomputes both fractions
     through a completely different path (unnest → per-(doc, ngram)
     GROUP BY → max/sum), so agreement checks the math, not the code.
     Both fractions round to 6 dp; docs with fewer than n tokens
@@ -315,10 +312,13 @@ def line_stats(
 
     100-TB shape: same as :func:`repetition_stats` — per-doc signals
     must not shuffle, so this is ONE scan→project with ZERO shuffles
-    (plan-asserted): split on newline, ``array_sort`` in-doc,
-    equal-neighbor flags from one ``zip_with`` over the shifted self,
-    duplicate occurrences and their character mass from linear
-    ``aggregate`` scans — all codegen, no explode, no groupBy. The
+    (plan-asserted): split on newline, ``array_sort`` in-doc, then
+    :func:`_sorted_dups`: equal-neighbor flags from one ``zip_with``
+    over the shifted self, and a line is duplicated iff either shifted
+    flag is set. Duplicate occurrences are a ``filter`` count, their
+    character mass one ``zip_with`` of lines and flags summed — every
+    lambda reads only its own variables, so the cost is linear in the
+    line count. All codegen, no explode, no groupBy. The
     DuckDB oracle recomputes both fractions through unnest →
     per-(doc, line) GROUP BY — a different evaluation path. Fractions
     round to 6 dp; docs with zero non-empty lines report (0, 0.0, 0.0).
@@ -326,34 +326,15 @@ def line_stats(
     duplicated content)."""
     lines = F.filter(F.split(F.col(text_col), "\n"), lambda l: l != F.lit(""))
     s = F.array_sort(lines)
-    m = F.size(s)
-    eq = F.when(
-        m >= 2,
-        F.zip_with(F.slice(s, 1, m - 1), F.slice(s, 2, m - 1), lambda a, b: a == b),
-    ).otherwise(F.array().cast("array<boolean>"))
-    is_dup = lambda i: (
-        F.coalesce(F.get(eq, i - 2), F.lit(False))
-        | F.coalesce(F.get(eq, i - 1), F.lit(False))
+    m, _, dup = _sorted_dups(s)
+    dup_occ = F.size(F.filter(dup, lambda d: d))
+    dup_chars = F.aggregate(
+        F.zip_with(
+            s, dup, lambda x, d: F.when(d, F.length(x)).otherwise(F.lit(0)).cast("long")
+        ),
+        F.lit(0).cast("long"),
+        lambda acc, c: acc + c,
     )
-    dup_occ = F.when(
-        m >= 2,
-        F.aggregate(
-            F.sequence(F.lit(1), m),
-            F.lit(0),
-            lambda acc, i: acc + F.when(is_dup(i), F.lit(1)).otherwise(F.lit(0)),
-        ),
-    ).otherwise(F.lit(0))
-    dup_chars = F.when(
-        m >= 2,
-        F.aggregate(
-            F.sequence(F.lit(1), m),
-            F.lit(0).cast("long"),
-            lambda acc, i: acc
-            + F.when(is_dup(i), F.length(F.get(s, i - 1)).cast("long")).otherwise(
-                F.lit(0).cast("long")
-            ),
-        ),
-    ).otherwise(F.lit(0).cast("long"))
     tot_chars = F.aggregate(
         s, F.lit(0).cast("long"), lambda acc, x: acc + F.length(x).cast("long")
     )
@@ -846,17 +827,19 @@ def luhn_valid_col(cand) -> "F.Column":
     candidate satisfy the Luhn checksum. For even-length numbers the
     doubled digits are the 1-based ODD positions from the left (= every
     second digit from the right, starting beside the check digit).
-    Pure integer expr — no UDF, no floats, engine-portable."""
-    s = F.regexp_replace(cand, r"[ -]", "")
+    Pure integer expr — no UDF, no floats, engine-portable: one pass
+    over the candidate's digit array, each lambda reading only its own
+    variables."""
+    digits = F.regexp_extract_all(cand, F.lit("[0-9]"), F.lit(0))
 
-    def _contrib(acc, i):
-        d = F.substring(s, i, 1).cast("int")
+    def _contrib(c, i):  # i is 0-based: even i = 1-based odd position
+        d = c.cast("int")
         doubled = d * 2
-        return acc + F.when(
-            i % 2 == 1, doubled - F.when(doubled > 9, 9).otherwise(0)
+        return F.when(
+            i % 2 == 0, doubled - F.when(doubled > 9, 9).otherwise(0)
         ).otherwise(d)
 
-    total = F.aggregate(F.sequence(F.lit(1), F.lit(16)), F.lit(0), _contrib)
+    total = F.aggregate(F.transform(digits, _contrib), F.lit(0), lambda acc, x: acc + x)
     return total % 10 == 0
 
 
@@ -897,23 +880,18 @@ def _checksum_mask_stats(
     ``pattern``, per-candidate validity from ``valid_col_fn``, ONLY
     valid candidates masked as ``token``, the text rebuilt from its
     split form (see :func:`cc_luhn_stats` for the engine-parity
-    argument). Emits (id, n_<prefix>_candidates, n_<prefix>_valid,
-    redacted)."""
+    argument): ``segs[0]`` then each (masked candidate, following
+    segment) pair of one ``zip_with``, joined. Emits (id,
+    n_<prefix>_candidates, n_<prefix>_valid, redacted)."""
     text = F.col(text_col)
     cands = F.regexp_extract_all(text, F.lit(pattern), F.lit(0))
     segs = F.split(text, pattern)
-
-    def _stitch(acc, i):
-        c = F.element_at(cands, i)
-        masked = F.when(valid_col_fn(c), F.lit(token)).otherwise(c)
-        return F.concat(acc, masked, F.element_at(segs, i + 1))
-
-    # sequence(1, 0) would COUNT DOWN ([1, 0]); guard the no-match case.
-    red = F.when(F.size(cands) == 0, text).otherwise(
-        F.aggregate(
-            F.sequence(F.lit(1), F.size(cands)), F.element_at(segs, 1), _stitch
-        )
+    pieces = F.zip_with(
+        cands,
+        F.slice(segs, 2, F.size(cands)),
+        lambda c, seg: F.concat(F.when(valid_col_fn(c), F.lit(token)).otherwise(c), seg),
     )
+    red = F.concat(F.element_at(segs, 1), F.array_join(pieces, ""))
     n_valid = F.size(F.filter(cands, lambda c: valid_col_fn(c)))
     return docs.select(
         F.col(id_col),
@@ -936,21 +914,22 @@ IBAN_CANDIDATE_PATTERN = r"[A-Z]{2}[0-9]{2}[A-Z0-9]{11,30}"
 def iban_valid_col(cand) -> "F.Column":
     """True iff a contiguous IBAN-shaped candidate passes the mod-97
     check. Checksum only — per-country length tables are a registry
-    lookup, not math, and belong to the caller's dimension data."""
+    lookup, not math, and belong to the caller's dimension data. One
+    fold over the rearranged candidate's character array."""
     r = F.concat(
         F.substring(cand, F.lit(5), F.length(cand) - 4),
         F.substring(cand, F.lit(1), F.lit(4)),
     )
 
-    def _step(acc, i):
-        a = F.ascii(F.substring(r, i, 1))
+    def _step(acc, ch):
+        a = F.ascii(ch)
         is_digit = a <= 57
         v = F.when(is_digit, a - 48).otherwise(a - 55)
         mul = F.when(is_digit, F.lit(10)).otherwise(F.lit(100))
         return (acc * mul + v) % 97
 
-    total = F.aggregate(F.sequence(F.lit(1), F.length(r)), F.lit(0), _step)
-    return total == 1
+    chars = F.regexp_extract_all(r, F.lit("[A-Z0-9]"), F.lit(0))
+    return F.aggregate(chars, F.lit(0), _step) == 1
 
 
 # ISO 13616 per-country IBAN lengths (the public SWIFT IBAN registry's

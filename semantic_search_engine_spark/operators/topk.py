@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, Window
 from ..functions.localdf import local_df
 from pyspark.sql import functions as F
 
-from ..functions.tokenizer import tokenize
+from ..functions.tokenizer import token_windows, tokenize
 
 
 def query_terms_df(spark, queries: list[dict]) -> DataFrame:
@@ -311,23 +311,19 @@ def search_conjunctive(scored: DataFrame, query: str, k: int = 10) -> DataFrame:
 def phrase_match_expr(ts, words: list[str]):
     """JVM boolean column: token array ``ts`` contains ``words`` as an
     ADJACENT subsequence (exact order). Pure higher-order expression —
-    exists(sequence(1, size-L+1), i -> ∧_j ts[i+j] = w_j) — so phrase
-    verification stays inside whole-stage codegen, no Python. The
-    size guard matters: Spark's sequence(start, stop) steps BACKWARD
-    when stop < start, which would probe nonsense windows."""
-    L = len(words)
+    exists(token_windows(ts, L), s -> ∧_j s.j = w_j) — so phrase
+    verification stays inside whole-stage codegen, no Python, linear
+    in the document. A document shorter than the phrase has no
+    windows, so it never matches."""
 
-    def window_matches(i):
+    def window_matches(s):
         cond = None
         for j, w in enumerate(words):
-            e = F.element_at(ts, i + F.lit(j)) == F.lit(w)
+            e = s[str(j)] == F.lit(w)
             cond = e if cond is None else cond & e
         return cond
 
-    return F.when(
-        F.size(ts) >= L,
-        F.exists(F.sequence(F.lit(1), F.size(ts) - F.lit(L - 1)), window_matches),
-    ).otherwise(F.lit(False))
+    return F.exists(token_windows(ts, len(words)), window_matches)
 
 
 def search_phrase(

@@ -138,3 +138,43 @@ def test_phrase_verify_stays_above_candidate_join(spark):
     # join condition — same guarantee); never pushed into the scan below
     assert min(adj_at) <= min(join_at)
     assert all(i <= min(join_at) for i in adj_at)
+
+
+def test_lambdas_read_only_their_own_variables(spark):
+    """No higher-order-function lambda in the text-statistics or
+    text-phrase expressions reads an outer expression (Spark would
+    re-evaluate it once per array element); the old index-scan n-gram
+    form is flagged, so the lint can fail."""
+    from semantic_search_engine_spark.functions.tokenizer import tokens_col
+    from semantic_search_engine_spark.operators import textstats as ts
+    from semantic_search_engine_spark.operators.topk import phrase_match_expr
+
+    docs = spark.createDataFrame(
+        [(0, "a b a b\nx\nx 4111 1111 1111 1111 DE89370400440532013000")],
+        "doc_id long, text string",
+    )
+    text = F.col("text")
+    outputs = {
+        "repetition_stats": ts.repetition_stats(docs),
+        "top_ngram_frac_col": docs.select(ts.top_ngram_frac_col(text, 3)),
+        "line_stats": ts.line_stats(docs),
+        "ngram_counts": ts.ngram_counts(docs, n=3),
+        "decontaminate": ts.decontaminate(docs, docs, n=2),
+        "boilerplate_stats": ts.boilerplate_stats(docs),
+        "cc_luhn_stats": ts.cc_luhn_stats(docs),
+        "iban_stats": ts.iban_stats(docs, registry=True),
+        "pii_stats": ts.pii_stats(docs, patterns=ts.PII_PATTERNS_V2),
+        "gopher_rules": ts.gopher_rules(docs),
+        "lang_id": ts.lang_id(docs),
+        "filter_funnel": ts.filter_funnel(docs, max_top_ngram_frac=0.5),
+        "phrase_match_expr": docs.filter(phrase_match_expr(tokens_col(text), ["a", "b"])),
+    }
+    for name, df in outputs.items():
+        assert audit.lambda_outer_refs(df) == [], name
+
+    ts_ = tokens_col(text)
+    old = docs.select(
+        F.transform(F.sequence(F.lit(1), F.size(ts_)), lambda i: F.element_at(ts_, i))
+    )
+    (flagged,) = audit.lambda_outer_refs(old)
+    assert flagged.startswith("filter(split(lower(text")

@@ -437,6 +437,7 @@ def test_phrase_match_semantics(spark):
         (4, "alpha"),                   # shorter than phrase
         (5, ""),                        # empty
         (6, "alpha alpha beta"),        # match with repeated first word
+        (7, "beta x alpha y " * 100 + "alpha beta"),  # only the last window
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     got = {
@@ -445,7 +446,7 @@ def test_phrase_match_semantics(spark):
             phrase_match_expr(tokens_col(F.col("text")), ["alpha", "beta"])
         ).collect()
     }
-    assert got == {0, 3, 6}
+    assert got == {0, 3, 6, 7}
     # 3-word phrase with a repeated word
     got3 = {
         r["doc_id"]

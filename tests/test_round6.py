@@ -443,6 +443,8 @@ def test_repetition_stats_semantics(spark):
         (3, "solo"),                               # < 2 tokens -> 0 ngrams
         (4, ""),                                   # empty
         (5, "p q p q"),                            # 'p q' 2x, 'q p' 1x
+        # a long page: per-row cost must stay linear in its length
+        (6, " ".join(np.random.default_rng(6).choice(["u", "v", "w", "x", "y"], 400))),
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     got = {

@@ -98,6 +98,8 @@ def test_line_stats_semantics(spark):
         (3, ""),                                                # no lines
         (4, "only"),                                            # one line
         (5, "aa\nbbbb\naa\nbbbb"),                              # all duplicated
+        # a long page: 150 lines drawn from 60, so most lines repeat
+        (6, "\n".join(f"line {i * 7 % 60}" for i in range(150))),
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     got = {
@@ -918,6 +920,15 @@ def test_cc_luhn_stats_semantics(spark):
         assert fgot[i]["redacted"] == (f"x <CC> y" if want_valid else f"x {c} y")
     assert 0 < n_valid_ref < 120  # the fuzz actually crosses the boundary
 
+    # a long page of 20 card-shaped runs, valid and invalid mixed
+    page_cards = cards[:18] + ["4111 1111 1111 1111", "4539-1488-0343-6467"]
+    page = " ; ".join(page_cards)
+    want = " ; ".join("<CC>" if luhn_ok(c) else c for c in page_cards)
+    long_doc = spark.createDataFrame([(0, page)], "doc_id long, text string")
+    (lgot,) = cc_luhn_stats(long_doc).collect()
+    assert lgot["n_cc_candidates"] == 20 and lgot["redacted"] == want
+    assert lgot["n_cc_valid"] == sum(map(luhn_ok, page_cards)) >= 2
+
     plan = audit.physical_plan(cc_luhn_stats(docs))
     assert "Exchange" not in plan and "Join" not in plan
 
@@ -1640,7 +1651,9 @@ def test_lm_dirichlet_semantics(spark):
 def test_qld_index_equals_text_path(spark, wand_index7):
     """search_index_qld (index-served) must rank and score identically
     to search_lm_dirichlet (text-path) for the same corpus, handle
-    multi-query batches with per-query ks, and void OOV queries."""
+    multi-query batches with per-query ks and shared terms (a term's
+    collection frequency counts each posting once), and void OOV
+    queries."""
     from semantic_search_engine_spark.operators.postings import (
         corpus_stats, term_frequencies,
     )
@@ -1663,13 +1676,14 @@ def test_qld_index_equals_text_path(spark, wand_index7):
         {"qid": 0, "query": "bababa cecece", "k": 10},
         {"qid": 1, "query": "bakice", "k": 5},
         {"qid": 2, "query": "zzzznope", "k": 5},   # OOV → absent
+        {"qid": 3, "query": "bababa bakice", "k": 7},  # shares a term with 0 and 1
     ]
     res = search_index_qld(reader, batch, mu=500.0).collect()
     by_q = {}
     for r in res:
         by_q.setdefault(r["qid"], []).append((dm[r["docid"]], r["score"]))
     assert 2 not in by_q
-    for q in batch[:2]:
+    for q in (batch[0], batch[1], batch[3]):
         want = [
             (r["docid"], r["score"])
             for r in search_lm_dirichlet(

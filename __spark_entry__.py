@@ -1396,9 +1396,11 @@ def _docs_with_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     signals need a derived view — pure SQL over the existing text,
     reproduced identically in the DuckDB oracle). Every LINE_DUP_STEP-th
     doc additionally repeats its first line at the end, so the
-    duplicate-line signal is non-vacuous (>0 flagged docs) and exact."""
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
-    ts = F.split(F.col("text"), " ")
+    duplicate-line signal is non-vacuous (>0 flagged docs) and exact.
+    The page is split once, as a column, so the per-line lambda slices
+    an attribute and the view costs O(tokens) per page."""
+    docs = _docs(spark, sf_dir).select("doc_id", F.split(F.col("text"), " ").alias("ts"))
+    ts = F.col("ts")
     n = F.size(ts)
     wrapped = F.when(
         n > 0,

@@ -793,50 +793,27 @@ def search_index_wand(
     return _topk_window(local, keep_ties=keep_boundary_ties)
 
 
-def _phrase_survivors(
-    cands: np.ndarray, words: list[str], data: dict, with_window: bool = False
-):
-    """Candidates (sorted docids, all containing every phrase term) →
-    the subset where the words occur ADJACENTLY in order, from
-    positions alone. data[t] = (docids, tfs, dls, positions,
-    run_starts) with positions strictly increasing per posting run.
-
-    Vectorized occurrence join: word j at in-doc position p supports a
-    phrase start at p−j, so each word contributes the sorted key set
-    {cand_index·M + (p−j)} and a phrase occurrence is a key present in
-    EVERY word's set — L−1 sorted intersections over the candidates'
-    position runs, no per-doc Python loop. Duplicate phrase words reuse
-    the same decoded run at their own offsets (handled naturally).
-
-    ``with_window=True`` additionally returns the LEFTMOST match
-    window per hit, ``(hits, win_start, win_end)`` — every adjacency
-    window has span L−1, so leftmost-minimal degenerates to the first
-    occurrence (keys are sorted; the first key per doc is it)."""
-    if cands.size == 0 or not words:
-        e = np.empty(0, dtype=np.int64)
-        return (cands, e.copy(), e.copy()) if with_window else cands
-    L = len(words)
-    M = max(int(data[w][3].max()) if data[w][3].size else 0 for w in set(words)) + L + 2
-    keys = None
-    for j, w in enumerate(words):
+def _occurrence_keys(cands: np.ndarray, words, data: dict, pad: int):
+    """``(M, {word: sorted keys})`` — every occurrence of each distinct
+    word in the candidates (sorted docids, all containing every word)
+    as the key cand_index·M + position. data[t] = (docids, tfs, dls,
+    positions, run_starts) with positions strictly increasing per
+    posting run, so each word's keys come out sorted (cand_index asc,
+    positions asc per run) with no per-doc Python loop. M exceeds every
+    position by ``pad`` + 1, so a probe up to ``pad`` positions before
+    or after a key never lands in another candidate's key range."""
+    uw = set(words)
+    M = max(int(data[w][3].max()) if data[w][3].size else 0 for w in uw) + pad + 2
+    keys = {}
+    for w in uw:
         d, tf, _, pos, rs = data[w]
         r = np.searchsorted(d, cands)
         counts = tf[r]
-        total = int(counts.sum())
         out_start = np.concatenate([[0], np.cumsum(counts)[:-1]])
-        idx = np.repeat(rs[r] - out_start, counts) + np.arange(total, dtype=np.int64)
-        p = pos[idx]
+        idx = np.repeat(rs[r] - out_start, counts) + np.arange(int(counts.sum()), dtype=np.int64)
         ci = np.repeat(np.arange(cands.size, dtype=np.int64), counts)
-        kj = (ci * M + p - j)[p >= j]
-        keys = kj if keys is None else np.intersect1d(keys, kj, assume_unique=True)
-        if keys.size == 0:
-            e = np.empty(0, dtype=np.int64)
-            return (e, e.copy(), e.copy()) if with_window else e
-    if not with_window:
-        return cands[np.unique(keys // M)]
-    uci, first_idx = np.unique(keys // M, return_index=True)
-    ws = keys[first_idx] % M  # keys sorted -> first key per doc = leftmost
-    return cands[uci], ws, ws + (L - 1)
+        keys[w] = ci * M + pos[idx]
+    return M, keys
 
 
 def _interval_max(vals: np.ndarray, lo: np.ndarray, hi: np.ndarray) -> np.ndarray:
@@ -845,11 +822,16 @@ def _interval_max(vals: np.ndarray, lo: np.ndarray, hi: np.ndarray) -> np.ndarra
     queries are O(1) each via the classic two-overlapping-powers-of-two
     lookup, so total cost is independent of the interval WIDTH (the
     property the proximity-boost chain filter needs: its windows are
-    max_gap wide, and a per-offset probe would pay O(max_gap) passes)."""
+    max_gap wide, and a per-offset probe would pay O(max_gap) passes).
+    A call whose intervals are all at most one wide (every adjacency
+    step, ``max_gap=1``) is a direct lookup with no table."""
     res = np.full(lo.size, -1, dtype=np.int64)
     n = vals.size
     ok = hi > lo
     if n == 0 or not ok.any():
+        return res
+    if int((hi - lo).max()) <= 1:
+        res[ok] = vals[lo[ok]]
         return res
     levels = [vals]
     j = 1
@@ -875,12 +857,15 @@ def _chain_survivors(
     """Ordered within-gap (proximity) match: the subset of candidates
     containing positions p_0 < p_1 < … < p_{L-1}, one per word in
     order, with every consecutive gap in [1, max_gap]. ``max_gap=1``
-    is exactly phrase adjacency.
+    is exactly phrase adjacency (word j must sit one position after
+    word j−1; repeated words need nothing special), and every such
+    chain spans L−1, so its slack is 0 and its window is the doc's
+    first occurrence.
 
     Chain filter, one sorted-array pass per word: S_0 = word 0's
-    occurrence keys; S_j keeps word j's occurrences with a predecessor
-    in [key−max_gap, key). Keys are cand_index·M + position with
-    M > max position + max_gap, so windows can never cross documents.
+    occurrence keys (:func:`_occurrence_keys`); S_j keeps word j's
+    occurrences with a predecessor in [key−max_gap, key). M > max
+    position + max_gap, so windows can never cross documents.
     O(total candidate positions · L) with binary searches — no per-doc
     Python loop.
 
@@ -915,40 +900,23 @@ def _chain_survivors(
             return _empty_ret()
         return (cands, empty.copy()) if with_slack else cands
     L = len(words)
-    M = (
-        max(int(data[w][3].max()) if data[w][3].size else 0 for w in set(words))
-        + max_gap + 2
-    )
-
-    def keys_for(w: str) -> np.ndarray:
-        d, tf, _, pos, rs = data[w]
-        r = np.searchsorted(d, cands)
-        counts = tf[r]
-        total = int(counts.sum())
-        out_start = np.concatenate([[0], np.cumsum(counts)[:-1]])
-        idx = np.repeat(rs[r] - out_start, counts) + np.arange(total, dtype=np.int64)
-        ci = np.repeat(np.arange(cands.size, dtype=np.int64), counts)
-        return ci * M + pos[idx]  # ci asc, positions asc per run → sorted
-
-    survivors = keys_for(words[0])
+    M, keys = _occurrence_keys(cands, words, data, max_gap)
+    survivors = keys[words[0]]
     starts = survivors % M if with_slack else None  # chain start = own position
     for w in words[1:]:
         if survivors.size == 0:
             return _empty_ret()
-        q = keys_for(w)
+        q = keys[w]
+        # predecessors in [q−max_gap, q); q−max_gap below a doc's key
+        # range cannot alias another doc (positions < M − max_gap − 1)
+        lo = np.searchsorted(survivors, q - max_gap)
+        hi = np.searchsorted(survivors, q)
         if not with_slack:
-            lo = np.searchsorted(survivors, q - max_gap)
-            hi = np.searchsorted(survivors, q)  # predecessors strictly below q
             survivors = q[hi > lo]
         else:
-            # predecessor window [q−max_gap, q): the windowed MAX of
-            # chain starts over it, one sparse-table range-max — cost
-            # independent of max_gap (a NEAR/50 boost query pays the
-            # same as NEAR/2). q−max_gap below a doc's key range cannot
-            # alias another doc (positions < M − max_gap − 2, same
-            # non-aliasing argument as the unboosted window above).
-            lo = np.searchsorted(survivors, q - max_gap)
-            hi = np.searchsorted(survivors, q)
+            # the windowed MAX of chain starts over the predecessor
+            # window, one range-max — cost independent of max_gap (a
+            # NEAR/50 boost query pays the same as NEAR/2)
             best = _interval_max(starts, lo, hi)
             keep = best >= 0
             survivors, starts = q[keep], best[keep]
@@ -979,8 +947,8 @@ def _window_survivors(
     containing ALL distinct query words inside some token window of
     span ≤ ``max_span`` (span = max position − min position of the
     covering occurrence set), in ANY order — Lucene's unordered
-    SpanNear, the third member of the span family next to phrase
-    adjacency and ordered slop.
+    SpanNear, the span family's other member next to the ordered chain
+    filter (phrase adjacency and ordered slop).
 
     Minimal-cover sweep, fully vectorized: every occurrence of every
     query word is an ANCHOR (candidate window minimum); for each
@@ -1021,20 +989,7 @@ def _window_survivors(
         if cands.size == 0:
             return _empty_ret()
         return (cands, empty.copy()) if with_slack else cands
-    M = (
-        max(int(data[w][3].max()) if data[w][3].size else 0 for w in uw)
-        + max_span + 2
-    )
-    keys = {}
-    for w in uw:
-        d, tf, _, pos, rs = data[w]
-        r = np.searchsorted(d, cands)
-        counts = tf[r]
-        total = int(counts.sum())
-        out_start = np.concatenate([[0], np.cumsum(counts)[:-1]])
-        idx = np.repeat(rs[r] - out_start, counts) + np.arange(total, dtype=np.int64)
-        ci = np.repeat(np.arange(cands.size, dtype=np.int64), counts)
-        keys[w] = ci * M + pos[idx]  # sorted: ci asc, positions asc per run
+    M, keys = _occurrence_keys(cands, uw, data, max_span)
     anchors = np.sort(np.concatenate(list(keys.values())))
     valid = np.ones(anchors.size, dtype=bool)
     end = anchors.copy()
@@ -1071,40 +1026,44 @@ def _span_hits(
     cands: np.ndarray, words: list[str], data: dict, gap: int,
     unordered: bool, with_slack: bool, with_window: bool = False,
 ):
-    """(hits, slack | None) — the ONE dispatch between the three span
-    filters (phrase adjacency / ordered chain / unordered window),
-    shared verbatim by the distributed kernel and the local probe so
-    their row-identity contract cannot drift. ``slack`` is None when
-    the caller doesn't need it (no boost), else the per-hit minimal
-    extra gap (0 for adjacency by definition).
+    """(hits, slack | None) from the unordered window filter or the
+    ordered chain filter (which is exact adjacency at ``gap=1``).
+    ``slack`` is None when the caller doesn't need it (no boost), else
+    the per-hit minimal extra gap.
 
-    ``with_window=True`` returns ``(hits, slack, win_start,
-    win_end)``: the LEFTMOST-minimal match window per hit across ALL
-    THREE span filters (Lucene-highlighting parity; see
-    :func:`_chain_survivors` / :func:`_window_survivors`), with slack
-    always materialized."""
-    if unordered:
-        if with_window:
-            return _window_survivors(cands, words, data, gap, with_window=True)
-        if not with_slack:
-            return _window_survivors(cands, words, data, gap), None
-        return _window_survivors(cands, words, data, gap, with_slack=True)
-    if with_window:
-        if gap == 1:
-            hits, ws, we = _phrase_survivors(cands, words, data, with_window=True)
-            return hits, np.zeros(hits.size, dtype=np.int64), ws, we
-        return _chain_survivors(cands, words, data, gap, with_window=True)
-    if not with_slack:
-        hits = (
-            _phrase_survivors(cands, words, data)
-            if gap == 1
-            else _chain_survivors(cands, words, data, gap)
-        )
-        return hits, None
-    if gap == 1:
-        hits = _phrase_survivors(cands, words, data)
-        return hits, np.zeros(hits.size, dtype=np.int64)  # adjacency ⇒ slack 0
-    return _chain_survivors(cands, words, data, gap, with_slack=True)
+    ``with_window=True`` returns ``(hits, slack, win_start, win_end)``:
+    the LEFTMOST-minimal match window per hit (Lucene-highlighting
+    parity; see :func:`_chain_survivors` / :func:`_window_survivors`),
+    with slack always materialized."""
+    span = _window_survivors if unordered else _chain_survivors
+    out = span(cands, words, data, gap, with_slack=with_slack, with_window=with_window)
+    return out if with_slack or with_window else (out, None)
+
+
+def _rank_span_hits(
+    cands: np.ndarray, words: list[str], data: dict, gap: int, unordered: bool,
+    boost: float, windows: bool, idf_map: dict, avgdl: float, k: int,
+    keep_ties: bool = False,
+):
+    """``(docids, scores, win_start | None, win_end | None)`` of one
+    span query's top hits: span verification (:func:`_span_hits`),
+    BM25 over the distinct words plus the proximity boost, then
+    :func:`_top_k`. The ONE verification-and-ranking tail of
+    ``search_index_phrase``'s kernel and ``LocalIndexProbe.search_phrase``,
+    so the two serving paths stay row-identical by construction. With
+    the boost off the slack is ignored (exact BM25 identity), even when
+    windows materialize it."""
+    hits, slack, *win = _span_hits(cands, words, data, gap, unordered, boost != 0.0, windows)
+    if boost == 0.0:
+        slack = None
+    qterms = sorted(set(words))
+    per_term = {t: data[t][:3] for t in qterms}
+    scores = _boosted(
+        _score_candidates(hits, per_term, idf_map, avgdl), slack, qterms, idf_map, boost
+    )
+    top = _top_k(hits, scores, k, keep_ties)
+    ws, we = (w[top] for w in win) if windows else (None, None)
+    return hits[top], scores[top], ws, we
 
 
 def _boosted(scores: np.ndarray, slack, qterms: list[str], idf_map: dict, boost: float):
@@ -1140,8 +1099,8 @@ def search_index_phrase(
     ``max_gap`` relaxes adjacency to ordered proximity (Lucene-style
     ordered slop): the words must appear in order with every
     consecutive in-doc gap in [1, max_gap]. The default 1 is exact
-    phrase adjacency; larger gaps use the same candidate cut and
-    positions streams with the chain filter (:func:`_chain_survivors`).
+    phrase adjacency; every gap runs the same candidate cut, positions
+    streams and chain filter (:func:`_chain_survivors`).
     A query dict may carry its own ``"gap"`` key to override
     ``max_gap`` per query — one batch can mix phrase and proximity
     retrieval.
@@ -1334,27 +1293,13 @@ def search_index_phrase(
                 cands = np.intersect1d(cands, data[t][0], assume_unique=True)
             if cands.size == 0:
                 continue
-            if emit_windows:
-                hits, slack, ws, we = _span_hits(
-                    cands, words, data, gap, uo, True, with_window=True
-                )
-                if proximity_boost == 0.0:
-                    slack = None  # boost off ignores slack (exact identity)
-            else:
-                ws = we = None
-                hits, slack = _span_hits(
-                    cands, words, data, gap, uo, proximity_boost != 0.0
-                )
-            if hits.size == 0:
-                continue
-            per_term = {t: (data[t][0], data[t][1], data[t][2]) for t in qterms}
-            scores = _boosted(
-                _score_candidates(hits, per_term, idf_map, avgdl),
-                slack, qterms, idf_map, proximity_boost,
+            docids, scores, ws, we = _rank_span_hits(
+                cands, words, data, gap, uo, proximity_boost, emit_windows,
+                idf_map, avgdl, k, keep_boundary_ties,
             )
-            top = _top_k(hits, scores, k, keep_boundary_ties)
-            part = (qid, k, hits[top], scores[top])
-            parts.append(part + (ws[top], we[top]) if emit_windows else part)
+            if docids.size:
+                part = (qid, k, docids, scores)
+                parts.append(part + (ws, we) if emit_windows else part)
         return _kernel_frame(parts, emit_windows)
 
     extra = ("win_start", "win_end") if emit_windows else ()
@@ -1738,31 +1683,16 @@ class LocalIndexProbe:
             cands = np.intersect1d(cands, data[t][0], assume_unique=True)
             if cands.size == 0:
                 return []
-        if return_window:
-            hits, slack, ws, we = _span_hits(
-                cands, words, data, max_gap, unordered, True, with_window=True
-            )
-            if proximity_boost == 0.0:
-                slack = None  # exact-identity path: boost off ignores slack
-        else:
-            ws = we = None
-            hits, slack = _span_hits(
-                cands, words, data, max_gap, unordered, proximity_boost != 0.0
-            )
-        if hits.size == 0:
-            return []
-        per_term = {t: (data[t][0], data[t][1], data[t][2]) for t in qterms}
-        scores = _boosted(
-            _score_candidates(hits, per_term, idf_map, self.avgdl),
-            slack, qterms, idf_map, proximity_boost,
+        docids, scores, ws, we = _rank_span_hits(
+            cands, words, data, max_gap, unordered, proximity_boost, return_window,
+            idf_map, self.avgdl, k,
         )
-        order = _top_k(hits, scores, k)
-        if ws is not None:
+        if return_window:
             return [
-                (r + 1, int(hits[i]), float(scores[i]), int(ws[i]), int(we[i]))
-                for r, i in enumerate(order)
+                (r + 1, int(d), float(s), int(a), int(b))
+                for r, (d, s, a, b) in enumerate(zip(docids, scores, ws, we))
             ]
-        return [(r + 1, int(hits[i]), float(scores[i])) for r, i in enumerate(order)]
+        return [(r + 1, int(d), float(s)) for r, (d, s) in enumerate(zip(docids, scores))]
 
 
 def render_snippets(

@@ -243,6 +243,28 @@ def test_pq_adc_shortlist_recall(emb):
     assert len(ids & want) / 5 >= 0.6
 
 
+def test_ann_build_refuses_empty_training_input(spark, emb):
+    """An empty embeddings frame, an n_rows below 1 and a sample with no
+    rows each raise a ValueError that names the cause, for all three
+    trained indexes."""
+    df, _ = emb
+    empty = df.limit(0)
+    builds = (
+        lambda e, **kw: similarity.IVFIndex.build(e, n_clusters=2, **kw),
+        lambda e, **kw: similarity.PQIndex.build(e, n_segments=4, n_codes=2, **kw),
+        lambda e, **kw: similarity.IVFPQIndex.build(
+            e, n_clusters=2, n_segments=4, n_codes=2, **kw
+        ),
+    )
+    for build in builds:
+        with pytest.raises(ValueError, match="embeddings frame is empty"):
+            build(empty)
+        with pytest.raises(ValueError, match="n_rows < 1"):
+            build(df, n_rows=0)
+    with pytest.raises(ValueError, match="empty training sample"):
+        similarity._collect_sample(empty.select("embedding"), "embedding", 10)
+
+
 def test_ivf_search_batch_matches_single(emb):
     """One-job batched IVF serving returns exactly the per-query answers."""
     df, m = emb

@@ -140,11 +140,14 @@ def test_phrase_verify_stays_above_candidate_join(spark):
     assert all(i <= min(join_at) for i in adj_at)
 
 
-def test_lambdas_read_only_their_own_variables(spark):
+def test_lambdas_read_only_their_own_variables(spark, tmp_path):
     """No higher-order-function lambda in the text-statistics or
-    text-phrase expressions reads an outer expression (Spark would
-    re-evaluate it once per array element); the old index-scan n-gram
-    form is flagged, so the lint can fail."""
+    text-phrase expressions, or in the driver's newline view of the
+    corpus, reads an outer expression (Spark would re-evaluate it once
+    per array element); the old index-scan n-gram form is flagged, so
+    the lint can fail."""
+    import __spark_entry__ as entry
+
     from semantic_search_engine_spark.functions.tokenizer import tokens_col
     from semantic_search_engine_spark.operators import textstats as ts
     from semantic_search_engine_spark.operators.topk import phrase_match_expr
@@ -169,6 +172,8 @@ def test_lambdas_read_only_their_own_variables(spark):
         "filter_funnel": ts.filter_funnel(docs, max_top_ngram_frac=0.5),
         "phrase_match_expr": docs.filter(phrase_match_expr(tokens_col(text), ["a", "b"])),
     }
+    docs.write.parquet(str(tmp_path / "documents.parquet"))
+    outputs["_docs_with_lines"] = entry._docs_with_lines(spark, str(tmp_path))
     for name, df in outputs.items():
         assert audit.lambda_outer_refs(df) == [], name
 

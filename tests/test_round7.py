@@ -25,9 +25,13 @@ def test_interval_max_fuzz():
         m = int(rng.integers(1, 50))
         lo = rng.integers(0, n + 1, size=m).astype(np.int64)
         hi = np.minimum(lo + rng.integers(0, n + 1, size=m), n).astype(np.int64)
-        got = _interval_max(vals, lo, hi)
-        want = [int(vals[a:b].max()) if b > a else -1 for a, b in zip(lo, hi)]
-        assert got.tolist() == want
+        # the second set has widths 0 or 1 only (the direct-lookup case)
+        lo1 = rng.integers(0, n, size=m).astype(np.int64)
+        hi1 = lo1 + rng.integers(0, 2, size=m).astype(np.int64)
+        for lo, hi in ((lo, hi), (lo1, hi1)):
+            got = _interval_max(vals, lo, hi)
+            want = [int(vals[a:b].max()) if b > a else -1 for a, b in zip(lo, hi)]
+            assert got.tolist() == want
     # all-empty and empty-vals edges
     assert _interval_max(np.empty(0, np.int64), np.array([0]), np.array([0])).tolist() == [-1]
     assert _interval_max(
@@ -1158,30 +1162,35 @@ def test_stratified_sample_semantics(spark):
 def test_span_windows_fuzz():
     """with_window must return the LEFTMOST-minimal valid window —
     min span, then min end, start = end − span — exactly matching
-    brute-force chain enumeration, for both the adjacency fast path
-    and the ordered chain DP, across random corpora."""
+    brute-force chain enumeration, for the ordered chain DP (exact
+    adjacency at max_gap=1, with all-zero slack there) and the
+    unordered window sweep, across random corpora. Trials from 40 on
+    draw the phrase's words with replacement from L−1 words, so every
+    one repeats a word ("w0 w1 w0", "w0 w0")."""
     from itertools import product
 
-    from semantic_search_engine_spark.operators.query import (
-        _chain_survivors, _phrase_survivors,
-    )
+    from semantic_search_engine_spark.operators.query import _chain_survivors
 
     rng = np.random.default_rng(20260821)
-    for trial in range(40):
+    for trial in range(70):
         L = int(rng.integers(2, 4))
         max_gap = int(rng.integers(1, 6))
-        words = [f"w{j}" for j in range(L)]
+        if trial < 40:
+            words = [f"w{j}" for j in range(L)]
+        else:
+            words = [f"w{j}" for j in rng.integers(0, L - 1, size=L)]
+        vocab = sorted(set(words))
         n_docs = int(rng.integers(1, 6))
         docids = np.sort(rng.choice(1000, size=n_docs, replace=False)).astype(np.int64)
-        pos_by = {w: {} for w in words}
+        pos_by = {w: {} for w in vocab}
         for d in docids:
-            for w in words:
+            for w in vocab:
                 cnt = int(rng.integers(1, 5))
                 pos_by[w][int(d)] = np.sort(
                     rng.choice(40, size=cnt, replace=False)
                 ).astype(np.int64)
         data = {}
-        for w in words:
+        for w in vocab:
             tfs = np.array([len(pos_by[w][int(d)]) for d in docids], dtype=np.int64)
             pos = np.concatenate([pos_by[w][int(d)] for d in docids])
             rs = np.concatenate([[0], np.cumsum(tfs)[:-1]]).astype(np.int64)
@@ -1197,13 +1206,14 @@ def test_span_windows_fuzz():
 
         want = {int(d): brute(d) for d in docids}
         want_hits = sorted(d for d, b in want.items() if b is not None)
-        if max_gap == 1:
-            hits, ws, we = _phrase_survivors(docids, words, data, with_window=True)
-        else:
-            hits, _, ws, we = _chain_survivors(
-                docids, words, data, max_gap, with_window=True
-            )
+        hits, slack, ws, we = _chain_survivors(
+            docids, words, data, max_gap, with_window=True
+        )
         assert hits.tolist() == want_hits, trial
+        if max_gap == 1:
+            assert not slack.any(), trial
+            s_hits, s_slack = _chain_survivors(docids, words, data, 1, with_slack=True)
+            assert s_hits.tolist() == want_hits and not s_slack.any(), trial
         for d, s, e in zip(hits, ws, we):
             span, end = want[int(d)]
             assert (int(e) - int(s), int(e)) == (span, end), (trial, d)
@@ -1234,8 +1244,8 @@ def test_span_windows_fuzz():
 
 def test_emit_windows_end_to_end(spark, tmp_path):
     """Distributed emit_windows must equal the probe's return_window
-    rows exactly (docid, score, offsets), refuse the unordered path,
-    and leave the plain schema untouched."""
+    rows exactly (docid, score, offsets) on the ordered and the
+    unordered path, and leave the plain schema untouched."""
     from semantic_search_engine_spark.operators.build import build_index
     from semantic_search_engine_spark.operators.query import (
         IndexReader, LocalIndexProbe, search_index_phrase,

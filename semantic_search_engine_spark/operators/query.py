@@ -822,16 +822,11 @@ def _interval_max(vals: np.ndarray, lo: np.ndarray, hi: np.ndarray) -> np.ndarra
     queries are O(1) each via the classic two-overlapping-powers-of-two
     lookup, so total cost is independent of the interval WIDTH (the
     property the proximity-boost chain filter needs: its windows are
-    max_gap wide, and a per-offset probe would pay O(max_gap) passes).
-    A call whose intervals are all at most one wide (every adjacency
-    step, ``max_gap=1``) is a direct lookup with no table."""
+    max_gap wide, and a per-offset probe would pay O(max_gap) passes)."""
     res = np.full(lo.size, -1, dtype=np.int64)
     n = vals.size
     ok = hi > lo
     if n == 0 or not ok.any():
-        return res
-    if int((hi - lo).max()) <= 1:
-        res[ok] = vals[lo[ok]]
         return res
     levels = [vals]
     j = 1
@@ -1022,38 +1017,23 @@ def _window_survivors(
     return hits, slack, ws, ws + min_span[sel]
 
 
-def _span_hits(
-    cands: np.ndarray, words: list[str], data: dict, gap: int,
-    unordered: bool, with_slack: bool, with_window: bool = False,
-):
-    """(hits, slack | None) from the unordered window filter or the
-    ordered chain filter (which is exact adjacency at ``gap=1``).
-    ``slack`` is None when the caller doesn't need it (no boost), else
-    the per-hit minimal extra gap.
-
-    ``with_window=True`` returns ``(hits, slack, win_start, win_end)``:
-    the LEFTMOST-minimal match window per hit (Lucene-highlighting
-    parity; see :func:`_chain_survivors` / :func:`_window_survivors`),
-    with slack always materialized."""
-    span = _window_survivors if unordered else _chain_survivors
-    out = span(cands, words, data, gap, with_slack=with_slack, with_window=with_window)
-    return out if with_slack or with_window else (out, None)
-
-
 def _rank_span_hits(
     cands: np.ndarray, words: list[str], data: dict, gap: int, unordered: bool,
     boost: float, windows: bool, idf_map: dict, avgdl: float, k: int,
     keep_ties: bool = False,
 ):
     """``(docids, scores, win_start | None, win_end | None)`` of one
-    span query's top hits: span verification (:func:`_span_hits`),
+    span query's top hits: span verification by the unordered window
+    filter or the ordered chain filter (exact adjacency at ``gap=1``),
     BM25 over the distinct words plus the proximity boost, then
     :func:`_top_k`. The ONE verification-and-ranking tail of
     ``search_index_phrase``'s kernel and ``LocalIndexProbe.search_phrase``,
     so the two serving paths stay row-identical by construction. With
     the boost off the slack is ignored (exact BM25 identity), even when
     windows materialize it."""
-    hits, slack, *win = _span_hits(cands, words, data, gap, unordered, boost != 0.0, windows)
+    span = _window_survivors if unordered else _chain_survivors
+    out = span(cands, words, data, gap, with_slack=boost != 0.0, with_window=windows)
+    hits, slack, *win = out if windows or boost != 0.0 else (out, None)
     if boost == 0.0:
         slack = None
     qterms = sorted(set(words))

@@ -48,8 +48,10 @@ _LEAVES = ("AttributeReference", "NamedLambdaVariable", "LambdaFunction")
 
 def lambda_outer_refs(df: DataFrame) -> list[str]:
     """Every maximal subtree of a higher-order-function lambda body in
-    ``df``'s analyzed plan that reads none of that lambda's variables
+    ``df``'s optimized plan that reads none of that lambda's variables
     and is not foldable, a column, a lambda variable or a nested lambda.
+    The optimized plan is the one that runs: a column projected before
+    the lambda and collapsed back into it by the optimizer shows there.
 
     Spark evaluates such a subtree once per array element, so an outer
     ``element_at(tokens, i)`` makes a per-row cost grow with the square
@@ -82,7 +84,7 @@ def lambda_outer_refs(df: DataFrame) -> list[str]:
         for c in _seq(e.children()):
             visit(c)
 
-    stack = [df._jdf.queryExecution().analyzed()]
+    stack = [df._jdf.queryExecution().optimizedPlan()]
     while stack:
         node = stack.pop()
         for e in _seq(node.expressions()):

@@ -25,13 +25,9 @@ def test_interval_max_fuzz():
         m = int(rng.integers(1, 50))
         lo = rng.integers(0, n + 1, size=m).astype(np.int64)
         hi = np.minimum(lo + rng.integers(0, n + 1, size=m), n).astype(np.int64)
-        # the second set has widths 0 or 1 only (the direct-lookup case)
-        lo1 = rng.integers(0, n, size=m).astype(np.int64)
-        hi1 = lo1 + rng.integers(0, 2, size=m).astype(np.int64)
-        for lo, hi in ((lo, hi), (lo1, hi1)):
-            got = _interval_max(vals, lo, hi)
-            want = [int(vals[a:b].max()) if b > a else -1 for a, b in zip(lo, hi)]
-            assert got.tolist() == want
+        got = _interval_max(vals, lo, hi)
+        want = [int(vals[a:b].max()) if b > a else -1 for a, b in zip(lo, hi)]
+        assert got.tolist() == want
     # all-empty and empty-vals edges
     assert _interval_max(np.empty(0, np.int64), np.array([0]), np.array([0])).tolist() == [-1]
     assert _interval_max(
